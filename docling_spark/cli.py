@@ -27,13 +27,10 @@ import pathlib
 import sys
 import urllib.parse
 
-# md/text render from the document's extracted markdown; the rest are
-# item-table serializers (the same sink registry the table job's --to
-# flag uses); "chunks" is the chunked-JSONL sink (the reference CLI's
-# --to chunks via HybridChunker, cli/main.py:447-450,596-640)
-_ITEM_FORMATS = ("json", "yaml", "doctags", "itxt", "html",
-                 "html_split_page", "doclang", "dclx")
-_ALL_FORMATS = ("md", "text") + _ITEM_FORMATS + ("chunks",)
+from docling_spark.jobs.convert import (
+    OUTPUT_FORMATS, check_formats, convert_batch,
+)
+
 # html and html_split_page must not share one extension — the second
 # write would silently clobber the first
 _EXTENSIONS = {"md": "md", "text": "txt", "json": "json", "yaml": "yaml",
@@ -44,11 +41,11 @@ _EXTENSIONS = {"md": "md", "text": "txt", "json": "json", "yaml": "yaml",
 # formats whose string transport is base64 of real bytes — decoded at
 # the file boundary so the on-disk artifact is the actual archive
 _B64_FORMATS = frozenset({"dclx"})
+# seconds one service request may take on top of the ?wait= long poll
+_HTTP_TIMEOUT_S = 30.0
 
 
 def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
-    from docling_spark.engine.extract import _HINT_ALIASES, KNOWN_FORMATS
-
     p = argparse.ArgumentParser(
         prog="docling-spark",
         description="Convert documents through the Spark-native engine")
@@ -63,7 +60,7 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                             "SKIPPED results (the reference CLI's --from)")
         c.add_argument("--to", dest="to_formats", default="md",
                        help=f"comma-separated output formats "
-                            f"({','.join(_ALL_FORMATS)}); default md")
+                            f"({','.join(OUTPUT_FORMATS)}); default md")
         c.add_argument("--output", default=".",
                        help="output directory (created if missing)")
         c.add_argument("--password", action="append", default=[],
@@ -108,16 +105,12 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                    help="seconds between status polls (sent as ?wait=)")
 
     args = p.parse_args(argv)
-    bad = [f for f in args.to_formats.split(",") if f not in _ALL_FORMATS]
-    if bad:
-        p.error(f"unknown output format(s): {','.join(bad)}")
-    if args.from_formats:
-        # a typo'd allow-list would silently SKIP every input and exit 0
-        # — validate it the way --to is validated
-        known = set(KNOWN_FORMATS) | set(_HINT_ALIASES)
-        bad = [f for f in args.from_formats.split(",") if f not in known]
-        if bad:
-            p.error(f"unknown input format(s): {','.join(bad)}")
+    try:
+        check_formats(args.to_formats.split(","),
+                      args.from_formats.split(",") if args.from_formats
+                      else None)
+    except ValueError as exc:
+        p.error(str(exc))
     return args
 
 
@@ -153,8 +146,9 @@ def _payload_of(data: bytes) -> str:
 
 
 def _sources_df(spark, files: list[pathlib.Path]):
-    """binaryFile scan → the table-job row shape. Payload encoding runs
-    INSIDE the Arrow batch on executors — the driver holds paths only."""
+    """binaryFile scan → the table-job row shape, keyed by the index of
+    each file in ``files``. Payload encoding runs INSIDE the Arrow batch
+    on executors — the driver holds paths only."""
     import pandas as pd
 
     raw = (
@@ -162,10 +156,12 @@ def _sources_df(spark, files: list[pathlib.Path]):
         .load([str(f) for f in files])
         .select("path", "content")
     )
+    # _collect_files dedupes resolved paths, so this map is 1:1
+    index = {str(f.resolve()): str(i) for i, f in enumerate(files)}
 
     def encode(batches):
         for pdf in batches:
-            paths = []
+            ids = []
             texts = []
             tools = []
             for path, content in zip(pdf["path"], pdf["content"]):
@@ -176,21 +172,26 @@ def _sources_df(spark, files: list[pathlib.Path]):
                     p = urllib.parse.unquote(parts.path)
                 else:
                     p = path
-                paths.append(p)
+                ids.append(index[str(pathlib.Path(p).resolve())])
                 texts.append(_payload_of(bytes(content)))
                 tools.append(pathlib.PurePath(p).suffix.lstrip(".").lower())
             yield pd.DataFrame({
-                "conv_id": paths,
-                "turn_idx": [0] * len(paths),
-                "role": ["user"] * len(paths),
+                "conv_id": ids,
+                "turn_idx": [0] * len(ids),
+                "role": ["user"] * len(ids),
                 "text": texts,
                 "tool": tools,
             })
 
-    return raw.mapInPandas(
+    df = raw.mapInPandas(
         encode,
         schema="conv_id string, turn_idx int, role string, "
                "text string, tool string")
+    # one file per task: the kernel cost is per-document CPU, and a CLI
+    # batch is small — the same pinned fan-out rationale as the table
+    # job's salting
+    return df.repartition(min(len(files),
+                              spark.sparkContext.defaultParallelism))
 
 
 def _out_path(out_dir: pathlib.Path, stem: str, ext: str,
@@ -206,157 +207,13 @@ def _out_path(out_dir: pathlib.Path, stem: str, ext: str,
     return out_dir / name
 
 
-def run_convert(args: argparse.Namespace) -> int:
-    from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
-
-    from docling_spark.operators.export import export_items
-    from docling_spark.operators.extract_ops import extract_turns
-
-    files = _collect_files(args.sources)
-    if not files:
-        print("no input files", file=sys.stderr)
-        return 2
-    out_dir = pathlib.Path(args.output)
-    out_dir.mkdir(parents=True, exist_ok=True)
-    to_formats = args.to_formats.split(",")
-    allowed = (frozenset(args.from_formats.split(","))
-               if args.from_formats else None)
-
-    cores = args.parallelism or "*"
-    spark = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName("docling-spark-cli")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    try:
-        df = _sources_df(spark, files)
-        # one file per task: the kernel cost is per-document CPU, and a
-        # CLI batch is small — the same pinned fan-out rationale as the
-        # table job's salting
-        df = df.repartition(min(len(files),
-                                spark.sparkContext.defaultParallelism))
-        extracted = extract_turns(
-            df, pdf_passwords=tuple(args.password),
-            allowed_formats=allowed).cache()
-
-        item_cols = [f for f in to_formats if f in _ITEM_FORMATS]
-        plan = extracted.select(
-            F.col("conv_id").alias("path"), "status", "format",
-            "extracted_text", "errors")
-        for fmt in item_cols:
-            ser = export_items(
-                extracted.select(F.col("conv_id").alias("path"), "items"),
-                fmt=fmt, keep_cols=("path",))
-            # "path" is unique by construction (_collect_files dedupes
-            # resolved paths), so this join is 1:1
-            plan = plan.join(ser, "path", "left")
-
-        # chunked-JSONL sink (the reference CLI's --to chunks,
-        # cli/main.py:596-640): run HybridChunker semantics over the
-        # exploded items and collect per-document chunk records. CLI
-        # batches are file-sized; the records stream per path.
-        chunks_by_path: dict[str, list[dict]] = {}
-        if "chunks" in to_formats:
-            from docling_spark.operators.chunker import hybrid_chunks
-
-            items_df = (
-                extracted.select(F.col("conv_id").alias("path"),
-                                 F.explode("items").alias("it"))
-                .select("path",
-                        F.col("it.item_idx").alias("item_idx"),
-                        F.col("it.label").alias("label"),
-                        F.col("it.level").alias("level"),
-                        F.col("it.text").alias("text"),
-                        F.col("it.content_layer").alias("content_layer"))
-            )
-            if args.chunker == "hierarchical":
-                # one chunk per item, heading context only — the
-                # reference's HierarchicalChunker (cli/main.py:471-472)
-                ch = hybrid_chunks(items_df, max_tokens=1 << 30,
-                                   merge_peers=False, doc_col="path",
-                                   with_provenance=True)
-            else:
-                ch = hybrid_chunks(
-                    items_df, max_tokens=args.chunk_max_tokens,
-                    doc_col="path", tokenizer_json=args.chunk_tokenizer,
-                    with_provenance=True)
-            for row in ch.toLocalIterator():
-                # the reference's ChunkedDocumentResultItem fields
-                # (datamodel/service/responses.py:146-163): text =
-                # contextualized, raw_text = bare chunk, doc_items =
-                # item self-refs (our flat-table spelling #/items/N)
-                chunks_by_path.setdefault(row["path"], []).append({
-                    "filename": pathlib.Path(row["path"]).stem,
-                    "chunk_index": row["chunk_idx"],
-                    "text": row["contextualized"],
-                    "raw_text": row["chunk_text"],
-                    "num_tokens": row["n_tokens"],
-                    "headings": list(row["headings"] or []),
-                    "captions": [],
-                    "doc_items": [f"#/items/{i}"
-                                  for i in (row["doc_items"] or [])],
-                    "page_numbers": [],
-                    "metadata": {},
-                })
-
-        n_ok = n_fail = n_skip = 0
-        taken: set[str] = set()
-        for row in plan.toLocalIterator():
-            stem = pathlib.Path(row["path"]).stem
-            if row["status"] == "success":
-                n_ok += 1
-            elif row["status"] == "skipped":
-                n_skip += 1
-            else:
-                n_fail += 1
-            if args.verbose or row["status"] != "success":
-                errs = "; ".join(e["message"] for e in (row["errors"] or []))
-                print(f"{row['status']:8s} {row['path']}"
-                      + (f"  [{errs}]" if errs else ""))
-            if row["status"] != "success":
-                continue
-            for fmt in to_formats:
-                if fmt == "chunks":
-                    recs = sorted(chunks_by_path.get(row["path"], []),
-                                  key=lambda r: r["chunk_index"])
-                    target = _out_path(out_dir, stem,
-                                       _EXTENSIONS[fmt], taken)
-                    # one JSON record per line, file written even when
-                    # a document yields no chunks (reference behavior)
-                    target.write_text(
-                        "".join(json.dumps(r, ensure_ascii=False) + "\n"
-                                for r in recs), encoding="utf-8")
-                    continue
-                content = (row["extracted_text"]
-                           if fmt in ("md", "text") else row[fmt])
-                if content is None:
-                    continue
-                target = _out_path(out_dir, stem, _EXTENSIONS[fmt], taken)
-                if fmt in _B64_FORMATS:
-                    # string transport is base64 of a real archive —
-                    # the on-disk artifact must be the bytes
-                    target.write_bytes(base64.b64decode(content))
-                else:
-                    target.write_text(content, encoding="utf-8")
-        extracted.unpersist()
-        print(f"converted {n_ok} ok, {n_skip} skipped, {n_fail} failed "
-              f"-> {out_dir}")
-        if args.abort_on_error and n_fail:
-            return 1
-        return 0
-    finally:
-        spark.stop()
-
-
-def _write_doc_outputs(doc: dict, status: str, out_dir: pathlib.Path,
+def _write_doc_outputs(doc: dict, out_dir: pathlib.Path,
                        to_formats: list[str], taken: set[str],
                        verbose: bool) -> str:
-    """Materialize one result document's content fields as files —
-    the shared sink for both the local and remote convert paths."""
+    """Materialize one result document's content fields and chunk
+    records as files — the one sink for both the local and the remote
+    convert paths. Returns the document's status."""
+    status = doc.get("status")
     stem = pathlib.Path(doc.get("filename") or "document").stem
     errs = "; ".join(e.get("error_message") or e.get("message") or ""
                      for e in (doc.get("errors") or []))
@@ -366,11 +223,19 @@ def _write_doc_outputs(doc: dict, status: str, out_dir: pathlib.Path,
     if status != "success":
         return status
     for fmt in to_formats:
-        content = doc.get(f"{fmt}_content")
-        if content is None:
-            continue
+        if fmt == "chunks":
+            # one JSON record per line, file written even when a document
+            # yields no chunks (reference behavior)
+            content = "".join(json.dumps(r, ensure_ascii=False) + "\n"
+                              for r in doc.get("chunks") or [])
+        else:
+            content = doc.get(f"{fmt}_content")
+            if content is None:
+                continue
         target = _out_path(out_dir, stem, _EXTENSIONS[fmt], taken)
         if fmt in _B64_FORMATS:
+            # string transport is base64 of a real archive — the on-disk
+            # artifact must be the bytes
             target.write_bytes(base64.b64decode(content))
         elif fmt == "json" and not isinstance(content, str):
             # remote json_content travels as a DoclingDocument OBJECT
@@ -382,64 +247,104 @@ def _write_doc_outputs(doc: dict, status: str, out_dir: pathlib.Path,
     return status
 
 
+def _write_all(docs: list[dict], out_dir: pathlib.Path,
+               to_formats: list[str], verbose: bool) -> int:
+    """Write every document's files in source order, print the summary
+    line and return the number of documents that did not succeed or
+    skip."""
+    taken: set[str] = set()
+    statuses = [_write_doc_outputs(doc, out_dir, to_formats, taken,
+                                   verbose) for doc in docs]
+    n_ok = statuses.count("success")
+    n_skip = statuses.count("skipped")
+    n_fail = len(statuses) - n_ok - n_skip
+    print(f"converted {n_ok} ok, {n_skip} skipped, {n_fail} failed "
+          f"-> {out_dir}")
+    return n_fail
+
+
+def run_convert(args: argparse.Namespace, files: list[pathlib.Path],
+                out_dir: pathlib.Path, to_formats: list[str]) -> int:
+    from pyspark.sql import SparkSession
+
+    cores = args.parallelism or "*"
+    spark = (
+        SparkSession.builder.master(f"local[{cores}]")
+        .appName("docling-spark-cli")
+        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        docs = convert_batch(
+            _sources_df(spark, files), [f.stem for f in files], to_formats,
+            allowed_formats=(args.from_formats.split(",")
+                             if args.from_formats else None),
+            pdf_passwords=args.password, chunker=args.chunker,
+            max_tokens=args.chunk_max_tokens,
+            tokenizer_json=args.chunk_tokenizer)
+        n_fail = _write_all([doc | {"filename": str(f)}
+                             for f, doc in zip(files, docs)],
+                            out_dir, to_formats, args.verbose)
+        return 1 if args.abort_on_error and n_fail else 0
+    finally:
+        spark.stop()
+
+
 def _remote_task(base: str, path: str, body: dict, wait: float,
                  verbose: bool) -> "tuple[str, dict]":
     """Submit → ?wait= poll → fetch against a docling-spark service:
-    (terminal task_status, result body)."""
+    (terminal task_status, result body). An unreachable or failing
+    service is a ``failure`` whose body names the error."""
     import time
     import urllib.request
 
-    req = urllib.request.Request(
-        f"{base}{path}", data=json.dumps(body).encode(),
-        headers={"Content-Type": "application/json"})
-    with urllib.request.urlopen(req) as resp:
-        task_id = json.loads(resp.read())["task_id"]
-    if verbose:
-        print(f"task {task_id} submitted to {path}")
-    while True:
-        poll = f"{base}/v1/status/poll/{task_id}?wait={wait}"
-        with urllib.request.urlopen(poll) as resp:
-            st = json.loads(resp.read())
-        if st["task_status"] in ("success", "failure"):
-            break
-        time.sleep(wait)
-    with urllib.request.urlopen(f"{base}/v1/result/{task_id}") as resp:
-        return st["task_status"], json.loads(resp.read())
+    timeout = _HTTP_TIMEOUT_S + wait
+    try:
+        req = urllib.request.Request(
+            f"{base}{path}", data=json.dumps(body).encode(),
+            headers={"Content-Type": "application/json"})
+        with urllib.request.urlopen(req, timeout=timeout) as resp:
+            task_id = json.loads(resp.read())["task_id"]
+        if verbose:
+            print(f"task {task_id} submitted to {path}")
+        while True:
+            poll = f"{base}/v1/status/poll/{task_id}?wait={wait}"
+            with urllib.request.urlopen(poll, timeout=timeout) as resp:
+                st = json.loads(resp.read())
+            if st["task_status"] in ("success", "failure"):
+                break
+            time.sleep(wait)
+        with urllib.request.urlopen(f"{base}/v1/result/{task_id}",
+                                    timeout=timeout) as resp:
+            return st["task_status"], json.loads(resp.read())
+    except OSError as exc:  # URLError, HTTPError and socket timeouts
+        return "failure", {"error": f"{base}{path}: {exc}"}
 
 
-def run_convert_remote(args: argparse.Namespace) -> int:
+def run_convert_remote(args: argparse.Namespace, files: list[pathlib.Path],
+                       out_dir: pathlib.Path, to_formats: list[str]) -> int:
     """The reference's ``convert-remote`` loop (service_client/client.py:
     submit → poll → fetch) as a thin stdlib client over our own service:
     POST /v1/convert/source/async (content formats) and/or
     POST /v1/chunk/<kind>/source/async (``--to chunks``), then the same
-    file sinks as local convert."""
-    files = _collect_files(args.sources)
-    if not files:
-        print("no input files", file=sys.stderr)
-        return 2
-    out_dir = pathlib.Path(args.output)
-    out_dir.mkdir(parents=True, exist_ok=True)
-    to_formats = args.to_formats.split(",")
+    file sink as local convert."""
     content_formats = [f for f in to_formats if f != "chunks"]
     base = args.url.rstrip("/")
 
-    sources = []
-    for f in files:
-        data = f.read_bytes()
-        payload = _payload_of(data)
-        sources.append({"name": f.name, "payload": payload,
-                        # binary payloads already travel base64; the
-                        # b64 flag is for raw-bytes senders only
-                        "b64": False,
-                        "tool": f.suffix.lstrip(".").lower()})
+    # binary payloads already travel base64; the b64 flag is for
+    # raw-bytes senders only
+    sources = [{"name": f.name, "payload": _payload_of(f.read_bytes()),
+                "b64": False, "tool": f.suffix.lstrip(".").lower()}
+               for f in files]
     options: dict = {}
     if args.from_formats:
         options["from_formats"] = args.from_formats.split(",")
     if args.password:
         options["pdf_passwords"] = args.password
 
-    taken: set[str] = set()
-    n_ok = n_fail = n_skip = 0
+    docs = [{"filename": f.name} for f in files]
     if content_formats:
         status, res = _remote_task(
             base, "/v1/convert/source/async",
@@ -450,21 +355,12 @@ def run_convert_remote(args: argparse.Namespace) -> int:
             print(f"task failed: {res.get('error')}", file=sys.stderr)
             return 1
         if "document" in res:  # single-source ConvertDocumentResponse
-            docs = [(res["document"]
-                     | {"errors": res.get("errors") or []},
-                     res["status"])]
+            got = [res["document"] | {"errors": res.get("errors") or [],
+                                      "status": res["status"]}]
         else:
-            docs = [(d, d.get("status"))
-                    for d in res.get("documents") or []]
-        for doc, st in docs:
-            s = _write_doc_outputs(doc, st, out_dir, content_formats,
-                                   taken, args.verbose)
-            if s == "success":
-                n_ok += 1
-            elif s == "skipped":
-                n_skip += 1
-            else:
-                n_fail += 1
+            got = res.get("documents") or []
+        for doc, d in zip(docs, got):
+            doc.update(d)
 
     if "chunks" in to_formats:
         # route to the service's chunk task endpoint; a file-path
@@ -474,39 +370,41 @@ def run_convert_remote(args: argparse.Namespace) -> int:
         if args.chunk_tokenizer:
             with open(args.chunk_tokenizer, encoding="utf-8") as fh:
                 copts["tokenizer_json"] = json.load(fh)
+        # records carry only a filename, and two inputs may share one:
+        # send "<index>:<name>" and map each record back by index
         status, res = _remote_task(
             base, f"/v1/chunk/{args.chunker}/source/async",
-            {"sources": sources, "convert_options": options,
-             "chunking_options": copts},
+            {"sources": [s | {"name": f"{i}:{s['name']}"}
+                         for i, s in enumerate(sources)],
+             "convert_options": options, "chunking_options": copts,
+             # the per-document status, when no convert task gave it
+             "include_converted_doc": not content_formats},
             args.poll_interval, args.verbose)
         if status == "failure":
             print(f"chunk task failed: {res.get('error')}",
                   file=sys.stderr)
             return 1
-        by_file: dict[str, list[dict]] = {}
+        for doc in docs:
+            doc["chunks"] = []
         for rec in res.get("chunks") or []:
-            by_file.setdefault(rec["filename"], []).append(rec)
-        for f in files:
-            recs = sorted(by_file.get(f.name, []),
-                          key=lambda r: r["chunk_index"])
-            target = _out_path(out_dir, f.stem, _EXTENSIONS["chunks"],
-                               taken)
-            target.write_text(
-                "".join(json.dumps(r, ensure_ascii=False) + "\n"
-                        for r in recs), encoding="utf-8")
+            i, _, name = rec["filename"].partition(":")
+            docs[int(i)]["chunks"].append(rec | {"filename": name})
+        for doc, d in zip(docs, res.get("documents") or []):
+            doc["status"] = d["status"]
 
-    print(f"converted {n_ok} ok, {n_skip} skipped, {n_fail} failed "
-          f"-> {out_dir}")
-    return 0 if n_fail == 0 else 1
+    return 1 if _write_all(docs, out_dir, to_formats, args.verbose) else 0
 
 
 def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv)
-    if args.command == "convert":
-        return run_convert(args)
-    if args.command == "convert-remote":
-        return run_convert_remote(args)
-    return 2  # pragma: no cover
+    files = _collect_files(args.sources)
+    if not files:
+        print("no input files", file=sys.stderr)
+        return 2
+    out_dir = pathlib.Path(args.output)
+    out_dir.mkdir(parents=True, exist_ok=True)
+    run = run_convert if args.command == "convert" else run_convert_remote
+    return run(args, files, out_dir, args.to_formats.split(","))
 
 
 if __name__ == "__main__":

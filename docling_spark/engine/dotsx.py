@@ -45,11 +45,6 @@ def _clean_json(raw: str) -> str:
     return raw
 
 
-def looks_like_dots(text: str) -> bool:
-    head = text[:4096]
-    return '"bbox"' in head and '"category"' in head
-
-
 def extract_dots(payload: str) -> tuple[str, list[Item], dict]:
     """payload (dots.ocr JSON) → (extracted_text, items, metrics)."""
     items: list[Item] = []

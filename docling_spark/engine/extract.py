@@ -20,7 +20,11 @@ mapInPandas batch loop.
 
 from __future__ import annotations
 
+import base64
+import importlib
 import re
+from collections.abc import Callable
+from typing import Any, NamedTuple
 
 from docling_spark.engine import asciidocx, csvx, emailx, htmlx, layoutx, mdx, vttx
 from docling_spark.functions.textnorm import normalize_plain, rate_text_quality
@@ -33,27 +37,6 @@ STATUS_SKIPPED = "skipped"
 # DocumentLimits.max_file_size analog (settings.py:23-26); payloads above
 # this are skipped, not parsed.
 DEFAULT_MAX_BYTES = 8 * 1024 * 1024
-
-KNOWN_FORMATS = ("html", "md", "csv", "pdfish", "pdf", "code", "vtt",
-                 "email", "asciidoc", "epub", "docling_json", "docx",
-                 "deepseek", "xlsx", "pptx", "ebcdic", "boxnote", "jats",
-                 "odt", "ods", "odp", "uspto", "latex", "doclang",
-                 "mets_gbs", "chandra", "dots", "xbrl", "image", "glm_json",
-                 "doctags", "docling_yaml", "media", "docbin", "xlsbin",
-                 "pptbin", "legacy_office", "plain")
-
-# hint-alias spellings accepted wherever a format name is taken (the
-# tool column AND the allowed-formats policy list)
-_HINT_ALIASES = {"dclx": "doclang", "mets": "mets_gbs", "glm": "glm_json",
-                 "yaml": "docling_yaml", "adoc": "asciidoc",
-                 "doc": "docbin", "dot": "docbin", "xls": "xlsbin",
-                 "xlt": "xlsbin", "ppt": "pptbin", "pot": "pptbin",
-                 **{a: "image" for a in ("png", "jpg", "jpeg", "gif",
-                                         "bmp", "webp", "tiff", "tif",
-                                         "ico")},
-                 **{a: "media" for a in ("audio", "video", "wav", "mp3",
-                                         "flac", "ogg", "m4a", "mp4",
-                                         "mov", "avi", "aac", "asr")}}
 
 _ADOC_SNIFF_RE = re.compile(r"(?m)^= \S.*\n(?:.*\n)*?^==+ \S")
 
@@ -79,35 +62,11 @@ def detect_format(text: str, tool: str = "", _carry: dict | None = None
     ``_carry`` (internal): extract_payload passes a dict so the OLE sniff
     can hand over its decoded bytes — classifying .doc/.xls/.ppt needs
     the container directory, and decoding a multi-MB base64 payload
-    twice (sniff + handler) doubled the costliest part of routing."""
-    hint = (tool or "").strip().lower()
-    if hint == "adoc":
-        hint = "asciidoc"
-    if hint in ("image", "png", "jpg", "jpeg", "gif", "bmp", "webp",
-                "tiff", "tif", "ico"):
-        return "image"
-    if hint in ("audio", "video", "wav", "mp3", "flac", "ogg", "m4a",
-                "mp4", "mov", "avi", "aac", "asr"):
-        return "media"
-    if hint in ("doc", "dot"):
-        # legacy Word binary: parsed NATIVELY (engine/docbinx.py) — the
-        # reference needs a LibreOffice subprocess for this format
-        return "docbin"
-    if hint in ("xls", "xlt"):
-        # legacy Excel binary: parsed NATIVELY (engine/xlsbinx.py) — the
-        # reference needs a LibreOffice subprocess for this format
-        return "xlsbin"
-    if hint in ("ppt", "pot"):
-        # legacy PowerPoint binary: parsed NATIVELY (engine/pptbinx.py) —
-        # the reference needs a LibreOffice subprocess for this format
-        return "pptbin"
-    if hint in ("html", "md", "csv", "pdfish", "pdf", "code", "vtt", "email",
-                "asciidoc", "epub", "docling_json", "docx", "deepseek",
-                "xlsx", "pptx", "ebcdic", "boxnote", "jats",
-                "odt", "ods", "odp", "uspto", "latex", "doclang", "dclx",
-                "mets_gbs", "mets", "chandra", "dots", "xbrl",
-                "glm", "glm_json", "doctags", "yaml", "docling_yaml"):
-        return _HINT_ALIASES.get(hint, hint)
+    twice (sniff + handler) doubled the costliest part of routing.
+    Every format name and alias in ``_FORMATS`` is a hint."""
+    fmt = FORMAT_HINTS.get((tool or "").strip().lower())
+    if fmt is not None:
+        return fmt
     ls = text.lstrip() if text else ""  # shared: the sniffs below probe
     # the first non-ws char repeatedly; one lstrip instead of four
     if text and text.find("<|ref|>", 0, 8192) >= 0:
@@ -166,8 +125,6 @@ def detect_format(text: str, tool: str = "", _carry: dict | None = None
     if text.startswith("UklGR"):
         # base64 RIFF: WEBP is an image; WAVE/AVI are media — decode the
         # 12-byte header to disambiguate
-        import base64
-
         try:
             head = base64.b64decode(text[:16] + "=" * 2)[:12]
         except Exception:
@@ -180,14 +137,12 @@ def detect_format(text: str, tool: str = "", _carry: dict | None = None
         return "pdf"
     if text.startswith("0M8R4KGx"):  # base64 OLE2 magic d0cf11e0a1b1
         # .doc vs .xls/.ppt needs the directory: peek the stream names
-        import base64
-
         from docling_spark.engine import olex
 
         try:
             raw = base64.b64decode(text)
             if _carry is not None:
-                _carry["ole_raw"] = raw
+                _carry["raw"] = raw
             streams = olex.OleFile(raw).streams()
         except Exception:
             streams = []
@@ -236,9 +191,6 @@ def detect_format(text: str, tool: str = "", _carry: dict | None = None
 # serializer-facing extras carried as ONE sparse stringified map (see
 # schema.ITEM_SCHEMA: ten mostly-null struct fields measurably halved
 # extraction throughput); operators/export.clean_item restores types
-_ITEM_BASE_KEYS = ("item_idx", "parent_idx", "label", "level", "text",
-                   "content_layer", "span_start", "span_end",
-                   "code_language")
 _ITEM_EXTRA_KEYS = ("page_no", "_hlevel", "_marker", "_start", "_inline",
                     "_raw", "_cap_ref", "_table_caption", "num_rows",
                     "num_cols")
@@ -333,6 +285,188 @@ def _html_result(text: str) -> tuple[str, list[dict], dict]:
     return extracted, items, metrics
 
 
+class _Unavailable(Exception):
+    """(module, message): a format whose reference backend delegates to
+    an external runtime this engine does not ship — a contained
+    dependency_error row."""
+
+
+def _media(text: str):
+    # the reference's ASR path needs ffmpeg + whisper
+    # (asr_transcriber.py MISSING_FFMPEG_MESSAGE); absent runtimes are a
+    # contained failure row — but the stream PROBE is real
+    # (engine/audiox.py), so the error carries the technical metadata a
+    # scheduler can route on
+    from docling_spark.engine.audiox import probe_media
+
+    try:
+        blob = base64.b64decode(text, validate=False) \
+            if not text.startswith(("RIFF", "fLaC", "OggS", "ID3")) \
+            else text.encode("latin-1", "ignore")
+    except Exception:
+        blob = b""
+    m = probe_media(blob)
+    probe = ", ".join(
+        f"{k}={m[k]}" for k in
+        ("container", "codec", "duration_s", "sample_rate", "channels")
+        if m.get(k) is not None
+    )
+    raise _Unavailable("asr", "ASR transcription requires an ffmpeg+whisper "
+                              "runtime (reference delegates; not available "
+                              "here); stream probe: "
+                              + (probe or "unrecognized"))
+
+
+def _legacy_office(payload):
+    raise _Unavailable("routing", "legacy Office format requires a "
+                                  "LibreOffice conversion step (reference "
+                                  "delegates; not available here)")
+
+
+def _pdf(raw: bytes, passwords: tuple[str, ...] = ()):
+    # job-level password list (the reference's per-document
+    # backend_options password, datamodel/backend_options.py); the
+    # engine always tries the empty user password itself
+    from docling_spark.engine import pdfx
+
+    pw_list = ("",) + tuple(passwords)
+    for pw_i, pw in enumerate(pw_list):
+        try:
+            return pdfx.extract_pdf(raw, password=pw)
+        except pdfx.PdfError as exc:
+            # exhaust by POSITION, not value: a duplicate or an early
+            # password equal to the last entry must not abort the
+            # retries before every password is tried
+            if "password" not in str(exc) or pw_i == len(pw_list) - 1:
+                raise
+
+
+def _latex(text: str):
+    from docling_spark.engine import latexx
+
+    if "\\begin{document}" not in text and text.lstrip().startswith("UEsDB"):
+        # base64 zip of an arXiv-style multi-file tex tree
+        return latexx.extract_latex_archive(base64.b64decode(text))
+    return latexx.extract_latex(text)
+
+
+def _lazy(path: str, *args) -> Callable[[Any], tuple]:
+    """Engine ``module.function`` imported on first call: a job touches
+    a few formats, and importing every engine up front costs each Python
+    worker process."""
+    module, _, name = path.rpartition(".")
+
+    def engine(payload):
+        mod = importlib.import_module(f"docling_spark.engine.{module}")
+        return getattr(mod, name)(payload, *args)
+    return engine
+
+
+# payload decodes: text formats travel as-is, binary formats base64 in
+# the text column; some binary families also arrive raw (latin-1) and
+# some XML formats also arrive as a base64 archive
+def _text(text: str) -> str:
+    return text
+
+
+def _b64(text: str) -> bytes:
+    return base64.b64decode(text)
+
+
+def _raw_or_b64(magic: str) -> Callable[[str], bytes]:
+    def decode(text: str) -> bytes:
+        if text.startswith(magic):
+            return text.encode("latin-1", "ignore")
+        return base64.b64decode(text)
+    return decode
+
+
+def _xml_or_b64(text: str) -> bytes | str:
+    return text if text.lstrip().startswith("<") else base64.b64decode(text)
+
+
+class _Format(NamedTuple):
+    aliases: tuple[str, ...]  # hint spellings besides the name itself
+    decode: Callable[[str], Any]
+    engine: Callable[[Any], tuple[str, list[dict], dict]]
+
+
+_OLE = _raw_or_b64("\xd0\xcf")
+
+# the one format table (the reference's format_to_options,
+# document_converter.py:267-309): a new input format is one row
+_FORMATS: dict[str, _Format] = {
+    "html": _Format((), _text, _html_result),
+    "md": _Format((), _text, mdx.extract_markdown),
+    "csv": _Format((), _text, csvx.extract_csv),
+    "pdfish": _Format((), _text, layoutx.extract_layout),
+    "pdf": _Format((), _raw_or_b64("%PDF-"), _pdf),
+    "code": _Format((), _text, _code_result),
+    "vtt": _Format((), _text, vttx.extract_vtt),
+    "email": _Format((), _text, emailx.extract_email),
+    "asciidoc": _Format(("adoc",), _text, asciidocx.extract_asciidoc),
+    "epub": _Format((), _b64, _lazy("epubx.extract_epub")),
+    "docling_json": _Format((), _text, _lazy("jsonx.extract_docling_json")),
+    "docx": _Format((), _b64, _lazy("docxx.extract_docx")),
+    "deepseek": _Format((), _text, _lazy("deepseekx.extract_deepseek")),
+    "xlsx": _Format((), _b64, _lazy("xlsxx.extract_xlsx")),
+    "pptx": _Format((), _b64, _lazy("pptxx.extract_pptx")),
+    "ebcdic": _Format((), _text, _lazy("ebcdicx.extract_ebcdic")),
+    "boxnote": _Format((), _text, _lazy("boxnotex.extract_boxnote")),
+    "jats": _Format((), _text, _lazy("jatsx.extract_jats")),
+    "odt": _Format((), _b64, _lazy("odfx.extract_odf", "odt")),
+    "ods": _Format((), _b64, _lazy("odfx.extract_odf", "ods")),
+    "odp": _Format((), _b64, _lazy("odfx.extract_odf", "odp")),
+    "uspto": _Format((), _text, _lazy("usptox.extract_uspto")),
+    "latex": _Format((), _text, _latex),
+    # a .dclx archive travels base64
+    "doclang": _Format(("dclx",), _xml_or_b64,
+                       _lazy("doclangx.extract_doclang")),
+    "mets_gbs": _Format(("mets",), _b64, _lazy("metsx.extract_mets_gbs")),
+    "chandra": _Format((), _text, _lazy("chandrax.extract_chandra")),
+    "dots": _Format((), _text, _lazy("dotsx.extract_dots")),
+    # an instance+taxonomy zip travels base64
+    "xbrl": _Format((), _xml_or_b64, _lazy("xbrlx.extract_xbrl")),
+    "image": _Format(("png", "jpg", "jpeg", "gif", "bmp", "webp", "tiff",
+                      "tif", "ico"), _b64, _lazy("imagex.extract_image")),
+    "glm_json": _Format(("glm",), _text, _lazy("glmx.extract_glm")),
+    "doctags": _Format((), _text, _lazy("doctagsx.extract_doctags")),
+    "docling_yaml": _Format(("yaml",), _text,
+                            _lazy("jsonx.extract_docling_yaml")),
+    "media": _Format(("audio", "video", "wav", "mp3", "flac", "ogg", "m4a",
+                      "mp4", "mov", "avi", "aac", "asr"), _text, _media),
+    # legacy Office binaries are parsed NATIVELY (engine/docbinx.py,
+    # xlsbinx.py, pptbinx.py) — the reference needs a LibreOffice
+    # subprocess for them
+    "docbin": _Format(("doc", "dot"), _OLE, _lazy("docbinx.extract_doc")),
+    "xlsbin": _Format(("xls", "xlt"), _OLE, _lazy("xlsbinx.extract_xls")),
+    "pptbin": _Format(("ppt", "pot"), _OLE, _lazy("pptbinx.extract_ppt")),
+    # other OLE2 containers (Visio, MSI, Publisher, …): the reference has
+    # no backend either
+    "legacy_office": _Format((), _text, _legacy_office),
+    "plain": _Format((), _text, _plain_result),
+}
+
+KNOWN_FORMATS = tuple(_FORMATS)
+
+# every accepted spelling → format name, wherever a format name is taken
+# (the tool column AND the allowed-formats policy list)
+FORMAT_HINTS = {alias: name for name, spec in _FORMATS.items()
+                for alias in (name, *spec.aliases)}
+
+
+def _result(status: str, fmt: str, errors: list[dict]) -> dict:
+    """A result row with no content: a failure, a skip or a timeout."""
+    return {
+        "status": status,
+        "format": fmt,
+        "extracted_text": "",
+        "items": [],
+        "errors": errors,
+        "metrics": dict(_EMPTY_METRICS),
+    }
+
+
 def extract_payload(
     text: str | None,
     tool: str = "",
@@ -344,17 +478,10 @@ def extract_payload(
 
     Returns ``{status, format, extracted_text, items, errors, metrics}``.
     """
-    errors: list[dict] = []
     if text is None:
-        return {
-            "status": STATUS_FAILURE,
-            "format": "plain",
-            "extracted_text": "",
-            "items": [],
-            "errors": [{"module": "input", "message": "null payload",
-                        "category": "input_error"}],
-            "metrics": dict(_EMPTY_METRICS),
-        }
+        return _result(STATUS_FAILURE, "plain", [
+            {"module": "input", "message": "null payload",
+             "category": "input_error"}])
     # byte-size gate without the up-to-8MB encode on the hot path:
     # len(text) > max_bytes ⇒ over (≥1 byte/char); len*4 ≤ max_bytes ⇒
     # under (≤4 bytes/char); only the narrow band between needs the
@@ -363,302 +490,43 @@ def extract_payload(
         len(text) * 4 > max_bytes
         and len(text.encode("utf-8", errors="replace")) > max_bytes
     ):
-        return {
-            "status": STATUS_SKIPPED,
-            "format": "plain",
-            "extracted_text": "",
-            "items": [],
-            "errors": [{"module": "limits",
-                        "message": f"payload exceeds {max_bytes} bytes",
-                        "category": "size_limit"}],
-            "metrics": dict(_EMPTY_METRICS),
-        }
+        return _result(STATUS_SKIPPED, "plain", [
+            {"module": "limits",
+             "message": f"payload exceeds {max_bytes} bytes",
+             "category": "size_limit"}])
     _carry: dict = {}
     fmt = detect_format(text, tool, _carry)
-    if allowed_formats is not None:
-        # accept the same alias spellings the hint vocabulary accepts
-        # (--from adoc must allow what tool='adoc' detects as)
-        allowed_formats = frozenset(
-            _HINT_ALIASES.get(a, a) for a in allowed_formats)
-    if allowed_formats is not None and fmt not in allowed_formats:
+    # the allow-list takes the same alias spellings the hint vocabulary
+    # takes (--from adoc must allow what tool='adoc' detects as)
+    if allowed_formats is not None and fmt not in {
+            FORMAT_HINTS.get(a, a) for a in allowed_formats}:
         # allowed-format policy (document_converter.py:738-752): a
         # disallowed format is SKIPPED with a POLICY-category error —
         # never attempted, never a failure. The gate sits after format
         # detection and before any engine runs, mirroring the reference's
         # pre-pipeline check in _process_document.
-        return {
-            "status": STATUS_SKIPPED,
-            "format": fmt,
-            "extracted_text": "",
-            "items": [],
-            "errors": [{"module": "user_input",
-                        "message": f"File format not allowed: {fmt}",
-                        "category": "policy"}],
-            "metrics": dict(_EMPTY_METRICS),
-        }
-    if fmt == "media":
-        # the reference's ASR path needs ffmpeg + whisper
-        # (asr_transcriber.py MISSING_FFMPEG_MESSAGE); absent runtimes are
-        # a contained failure row — but the stream PROBE is real
-        # (engine/audiox.py), so the error carries the technical metadata
-        # a scheduler can route on
-        import base64
-
-        from docling_spark.engine.audiox import probe_media
-
-        try:
-            blob = base64.b64decode(text, validate=False) \
-                if not text.startswith(("RIFF", "fLaC", "OggS", "ID3")) \
-                else text.encode("latin-1", "ignore")
-        except Exception:
-            blob = b""
-        m = probe_media(blob)
-        probe = ", ".join(
-            f"{k}={m[k]}" for k in
-            ("container", "codec", "duration_s", "sample_rate", "channels")
-            if m.get(k) is not None
-        )
-        return {
-            "status": STATUS_FAILURE,
-            "format": "media",
-            "extracted_text": "",
-            "items": [],
-            "errors": [{"module": "asr",
-                        "message": "ASR transcription requires an "
-                                   "ffmpeg+whisper runtime (reference "
-                                   "delegates; not available here); "
-                                   f"stream probe: {probe or 'unrecognized'}",
-                        "category": "dependency_error"}],
-            "metrics": dict(_EMPTY_METRICS),
-        }
-    if fmt == "legacy_office":
-        return {
-            "status": STATUS_FAILURE,
-            "format": "legacy_office",
-            "extracted_text": "",
-            "items": [],
-            "errors": [{"module": "routing",
-                        "message": "legacy Office format requires a "
-                                   "LibreOffice conversion step (reference "
-                                   "delegates; not available here)",
-                        "category": "dependency_error"}],
-            "metrics": dict(_EMPTY_METRICS),
-        }
+        return _result(STATUS_SKIPPED, fmt, [
+            {"module": "user_input",
+             "message": f"File format not allowed: {fmt}",
+             "category": "policy"}])
+    spec = _FORMATS[fmt]
     try:
-        if fmt == "html":
-            extracted, items, metrics = _html_result(text)
-        elif fmt == "md":
-            extracted, items, metrics = mdx.extract_markdown(text)
-        elif fmt == "csv":
-            extracted, items, metrics = csvx.extract_csv(text)
-        elif fmt == "pdfish":
-            extracted, items, metrics = layoutx.extract_layout(text)
-        elif fmt == "vtt":
-            extracted, items, metrics = vttx.extract_vtt(text)
-        elif fmt == "email":
-            extracted, items, metrics = emailx.extract_email(text)
-        elif fmt == "asciidoc":
-            extracted, items, metrics = asciidocx.extract_asciidoc(text)
-        elif fmt == "deepseek":
-            from docling_spark.engine import deepseekx
-
-            extracted, items, metrics = deepseekx.extract_deepseek(text)
-        elif fmt == "docling_json":
-            from docling_spark.engine import jsonx
-
-            extracted, items, metrics = jsonx.extract_docling_json(text)
-        elif fmt == "glm_json":
-            from docling_spark.engine import glmx
-
-            extracted, items, metrics = glmx.extract_glm(text)
-        elif fmt == "doctags":
-            from docling_spark.engine import doctagsx
-
-            extracted, items, metrics = doctagsx.extract_doctags(text)
-        elif fmt == "docling_yaml":
-            from docling_spark.engine import jsonx
-
-            extracted, items, metrics = jsonx.extract_docling_yaml(text)
-        elif fmt == "epub":
-            # binary formats travel base64-encoded in the text column
-            import base64
-
-            from docling_spark.engine import epubx
-
-            extracted, items, metrics = epubx.extract_epub(
-                base64.b64decode(text)
-            )
-        elif fmt == "docx":
-            import base64
-
-            from docling_spark.engine import docxx
-
-            extracted, items, metrics = docxx.extract_docx(
-                base64.b64decode(text)
-            )
-        elif fmt == "xlsx":
-            import base64
-
-            from docling_spark.engine import xlsxx
-
-            extracted, items, metrics = xlsxx.extract_xlsx(
-                base64.b64decode(text)
-            )
-        elif fmt == "pptx":
-            import base64
-
-            from docling_spark.engine import pptxx
-
-            extracted, items, metrics = pptxx.extract_pptx(
-                base64.b64decode(text)
-            )
-        elif fmt == "docbin":
-            import base64
-
-            from docling_spark.engine import docbinx
-
-            raw_d = _carry.get("ole_raw") or (
-                text.encode("latin-1", "ignore")
-                if text.startswith("\xd0\xcf")
-                else base64.b64decode(text))
-            extracted, items, metrics = docbinx.extract_doc(raw_d)
-        elif fmt == "xlsbin":
-            import base64
-
-            from docling_spark.engine import xlsbinx
-
-            raw_x = _carry.get("ole_raw") or (
-                text.encode("latin-1", "ignore")
-                if text.startswith("\xd0\xcf")
-                else base64.b64decode(text))
-            extracted, items, metrics = xlsbinx.extract_xls(raw_x)
-        elif fmt == "pptbin":
-            import base64
-
-            from docling_spark.engine import pptbinx
-
-            raw_pp = _carry.get("ole_raw") or (
-                text.encode("latin-1", "ignore")
-                if text.startswith("\xd0\xcf")
-                else base64.b64decode(text))
-            extracted, items, metrics = pptbinx.extract_ppt(raw_pp)
-        elif fmt == "pdf":
-            from docling_spark.engine import pdfx
-
-            if text.startswith("%PDF-"):
-                raw_p = text.encode("latin-1", "ignore")
-            else:
-                import base64
-
-                raw_p = base64.b64decode(text)
-            # job-level password list (the reference's per-document
-            # backend_options password, datamodel/backend_options.py);
-            # the engine always tries the empty user password itself
-            pw_list = ("",) + tuple(pdf_passwords)
-            for pw_i, pw in enumerate(pw_list):
-                try:
-                    extracted, items, metrics = pdfx.extract_pdf(
-                        raw_p, password=pw)
-                    break
-                except pdfx.PdfError as exc:
-                    # exhaust by POSITION, not value: a duplicate or an
-                    # early password equal to the last entry must not
-                    # abort the retries before every password is tried
-                    if "password" not in str(exc) or pw_i == len(pw_list) - 1:
-                        raise
-        elif fmt == "ebcdic":
-            from docling_spark.engine import ebcdicx
-
-            extracted, items, metrics = ebcdicx.extract_ebcdic(text)
-        elif fmt == "boxnote":
-            from docling_spark.engine import boxnotex
-
-            extracted, items, metrics = boxnotex.extract_boxnote(text)
-        elif fmt == "jats":
-            from docling_spark.engine import jatsx
-
-            extracted, items, metrics = jatsx.extract_jats(text)
-        elif fmt == "uspto":
-            from docling_spark.engine import usptox
-
-            extracted, items, metrics = usptox.extract_uspto(text)
-        elif fmt == "latex":
-            from docling_spark.engine import latexx
-
-            if "\\begin{document}" not in text and \
-                    text.lstrip().startswith("UEsDB"):
-                # base64 zip of an arXiv-style multi-file tex tree
-                import base64
-
-                extracted, items, metrics = latexx.extract_latex_archive(
-                    base64.b64decode(text)
-                )
-            else:
-                extracted, items, metrics = latexx.extract_latex(text)
-        elif fmt == "xbrl":
-            from docling_spark.engine import xbrlx
-
-            raw_x: bytes | str = text
-            if not text.lstrip().startswith("<"):
-                import base64
-
-                raw_x = base64.b64decode(text)  # instance+taxonomy zip
-            extracted, items, metrics = xbrlx.extract_xbrl(raw_x)
-        elif fmt == "dots":
-            from docling_spark.engine import dotsx
-
-            extracted, items, metrics = dotsx.extract_dots(text)
-        elif fmt == "chandra":
-            from docling_spark.engine import chandrax
-
-            extracted, items, metrics = chandrax.extract_chandra(text)
-        elif fmt == "mets_gbs":
-            import base64
-
-            from docling_spark.engine import metsx
-
-            extracted, items, metrics = metsx.extract_mets_gbs(
-                base64.b64decode(text)
-            )
-        elif fmt == "doclang":
-            from docling_spark.engine import doclangx
-
-            raw: bytes | str = text
-            if not text.lstrip().startswith("<"):
-                import base64
-
-                raw = base64.b64decode(text)  # .dclx archive travels b64
-            extracted, items, metrics = doclangx.extract_doclang(raw)
-        elif fmt in ("odt", "ods", "odp"):
-            import base64
-
-            from docling_spark.engine import odfx
-
-            extracted, items, metrics = odfx.extract_odf(
-                base64.b64decode(text), fmt
-            )
-        elif fmt == "image":
-            import base64
-
-            from docling_spark.engine import imagex
-
-            extracted, items, metrics = imagex.extract_image(
-                base64.b64decode(text)
-            )
-        elif fmt == "code":
-            extracted, items, metrics = _code_result(text)
+        # the OLE sniff may already hold the decoded bytes
+        payload = _carry.get("raw") or spec.decode(text)
+        if fmt == "pdf":  # the only engine that takes a job-level option
+            extracted, items, metrics = _pdf(payload, pdf_passwords)
         else:
-            extracted, items, metrics = _plain_result(text)
+            extracted, items, metrics = spec.engine(payload)
+    except _Unavailable as exc:
+        module, message = exc.args
+        return _result(STATUS_FAILURE, fmt, [
+            {"module": module, "message": message,
+             "category": "dependency_error"}])
     except Exception as exc:  # containment: ErrorItem row, not a task error
-        return {
-            "status": STATUS_FAILURE,
-            "format": fmt,
-            "extracted_text": "",
-            "items": [],
-            "errors": [{"module": f"engine.{fmt}", "message": str(exc)[:500],
-                        "category": "parse_error"}],
-            "metrics": dict(_EMPTY_METRICS),
-        }
+        return _result(STATUS_FAILURE, fmt, [
+            {"module": f"engine.{fmt}", "message": str(exc)[:500],
+             "category": "parse_error"}])
+    errors: list[dict] = []
     status = STATUS_SUCCESS
     if metrics.get("parse_score", 1.0) == 0.0 and extracted:
         status = STATUS_PARTIAL

@@ -166,11 +166,6 @@ def parse_payload(payload: str) -> tuple[list[dict], dict[int, tuple]]:
     return cells, page_sizes
 
 
-def parse_cells(payload: str) -> list[dict]:
-    """JSON-lines → validated cell dicts (page-size lines dropped)."""
-    return parse_payload(payload)[0]
-
-
 def drop_full_page_pictures(
     cells: list[dict], page_sizes: dict[int, tuple] | None = None
 ) -> list[dict]:

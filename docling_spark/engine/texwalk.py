@@ -211,10 +211,6 @@ _LABEL_RE = re.compile(r"\\label\{.*?\}")
 _COMMENT_RE = re.compile(r"%[^\n]*(?:\n[ \t]*(?=\S))?")
 
 
-class TexParseError(ValueError):
-    pass
-
-
 class _Parser:
     """Single-pass tolerant recursive-descent parser producing the node
     model above.  ``stop`` protocol: '}' / ']' return to the enclosing
@@ -530,10 +526,6 @@ class _Parser:
         args, p = self._parse_args(pos, ENV_SPECS.get(env_name, ""))
         nodes, p2 = self._parse_nodes(p, stop=("env", env_name))
         return Env(env_name, args, nodes, begin_pos, p2), p2
-
-
-def parse_latex(src: str) -> list:
-    return _Parser(src).parse()
 
 
 def node_verbatim(src: str, node) -> str:

@@ -53,9 +53,9 @@ import urllib.parse
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-_ITEM_FORMATS = ("json", "yaml", "doctags", "itxt", "html",
-                 "html_split_page", "doclang", "dclx")
-_ALL_FORMATS = ("md", "text") + _ITEM_FORMATS
+from docling_spark.jobs.convert import (
+    CONTENT_FORMATS, check_formats, convert_batch,
+)
 
 TERMINAL = ("success", "failure")
 
@@ -135,17 +135,13 @@ class JobService:
                     old = self._terminal_order.pop(0)
                     self.tasks.pop(old, None)
 
-    def _extract_sources(self, sources: list, opts: dict,
-                         allowed) -> tuple:
-        """(cached extracted DF keyed by batch-index conv_id, names).
-        conv_id = the batch INDEX, not the client-supplied name: two
-        sources sharing a name would cross-multiply the per-format
-        export joins."""
-        import base64 as _b64
-
-        from docling_spark.operators.extract_ops import extract_turns
-
-        pw = tuple(opts.get("pdf_passwords") or ())
+    def _sources_df(self, sources: list) -> tuple:
+        """(source rows keyed by batch-index conv_id, names). conv_id =
+        the batch INDEX, not the client-supplied name: two sources
+        sharing a name would cross-multiply the per-format export
+        joins."""
+        if not sources:
+            raise ValueError("no sources")
         rows = []
         names = []
         for i, s in enumerate(sources):
@@ -154,18 +150,14 @@ class JobService:
                 # travel base64 exactly like binary table payloads —
                 # the engine's sniffers accept the b64 spelling natively
                 payload = payload if isinstance(payload, str) else \
-                    _b64.b64encode(payload).decode("ascii")
+                    base64.b64encode(payload).decode("ascii")
             names.append(s.get("name") or f"doc_{i}")
             rows.append((str(i), 0, "user", payload,
                          s.get("tool") or ""))
         df = self.spark.createDataFrame(
             rows, "conv_id string, turn_idx int, role string, "
                   "text string, tool string")
-        extracted = extract_turns(
-            df, pdf_passwords=pw,
-            allowed_formats=frozenset(allowed) if allowed else None
-        ).cache()
-        return extracted, names
+        return df, names
 
     def _chunk(self, body: dict) -> dict:
         """Chunk-task twin of the reference's
@@ -182,172 +174,75 @@ class JobService:
         ``chunking_options.max_tokens`` and an optional inline
         ``chunking_options.tokenizer_json`` (HF tokenizer.json dict —
         counts then come from functions/bpe.py)."""
-        from pyspark.sql import functions as F
-
-        from docling_spark.operators.chunker import hybrid_chunks
-
-        from docling_spark.engine.extract import _HINT_ALIASES, KNOWN_FORMATS
-
         t0 = time.monotonic()
-        sources = body.get("sources") or []
-        if not sources:
-            raise ValueError("no sources")
         opts = body.get("convert_options") or {}
         copts = body.get("chunking_options") or {}
-        kind = body.get("_chunker") or copts.get("chunker") or "hybrid"
         allowed = opts.get("from_formats")
-        if allowed:
-            # same validation as _convert: a typo'd allow-list must
-            # fail the task, not silently SKIP every source
-            known = set(KNOWN_FORMATS) | set(_HINT_ALIASES)
-            bad = [f for f in allowed if f not in known]
-            if bad:
-                raise ValueError(
-                    f"unknown input format(s): {','.join(bad)}")
-        extracted, names = self._extract_sources(sources, opts, allowed)
-        try:
-            items_df = (
-                extracted.select(F.col("conv_id").alias("uid"),
-                                 F.explode("items").alias("it"))
-                .select("uid",
-                        F.col("it.item_idx").alias("item_idx"),
-                        F.col("it.label").alias("label"),
-                        F.col("it.level").alias("level"),
-                        F.col("it.text").alias("text"),
-                        F.col("it.content_layer")
-                        .alias("content_layer"))
-            )
-            if kind == "hierarchical":
-                ch = hybrid_chunks(items_df, max_tokens=1 << 30,
-                                   merge_peers=False, doc_col="uid",
-                                   with_provenance=True)
-            else:
-                ch = hybrid_chunks(
-                    items_df,
-                    max_tokens=int(copts.get("max_tokens") or 128),
-                    doc_col="uid",
-                    tokenizer_json=copts.get("tokenizer_json"),
-                    with_provenance=True)
-            chunks: list[dict] = []
-            for row in sorted(ch.toLocalIterator(),
-                              key=lambda r: (int(r["uid"]),
-                                             r["chunk_idx"])):
-                chunks.append({
-                    "filename": names[int(row["uid"])],
-                    "chunk_index": row["chunk_idx"],
-                    "text": row["contextualized"],
-                    "raw_text": row["chunk_text"],
-                    "num_tokens": row["n_tokens"],
-                    "headings": list(row["headings"] or []),
-                    "captions": [],
-                    "doc_items": [f"#/items/{i}"
-                                  for i in (row["doc_items"] or [])],
-                    "page_numbers": [],
-                    "metadata": {},
-                })
-            documents: list[dict] = []
-            if body.get("include_converted_doc"):
-                for r in extracted.select(
-                        "conv_id", "status",
-                        "extracted_text").toLocalIterator():
-                    documents.append({
-                        "kind": "ExportResult",
-                        "content": {
-                            "filename": names[int(r["conv_id"])],
-                            "md_content": r["extracted_text"]},
-                        "status": r["status"],
-                        "errors": [],
-                    })
-            return {"chunks": chunks, "documents": documents,
-                    "processing_time": time.monotonic() - t0}
-        finally:
-            extracted.unpersist()
+        df, names = self._sources_df(body.get("sources") or [])
+        check_formats((), allowed)
+        docs = convert_batch(
+            df, names, ("md", "chunks"), allowed_formats=allowed,
+            pdf_passwords=opts.get("pdf_passwords") or (),
+            chunker=body.get("_chunker") or copts.get("chunker")
+            or "hybrid",
+            max_tokens=int(copts.get("max_tokens") or 128),
+            tokenizer_json=copts.get("tokenizer_json"))
+        documents = [
+            {"kind": "ExportResult",
+             "content": {"filename": name,
+                         "md_content": d["md_content"]},
+             "status": d["status"], "errors": []}
+            for name, d in zip(names, docs)
+        ] if body.get("include_converted_doc") else []
+        return {"chunks": [c for d in docs for c in d["chunks"]],
+                "documents": documents,
+                "processing_time": time.monotonic() - t0}
 
     def _convert(self, body: dict) -> dict:
-        from pyspark.sql import functions as F
-
-        from docling_spark.engine.extract import _HINT_ALIASES, KNOWN_FORMATS
-        from docling_spark.operators.export import export_items
-
         t0 = time.monotonic()
-        sources = body.get("sources") or []
-        if not sources:
-            raise ValueError("no sources")
         opts = body.get("options") or {}
         to_formats = opts.get("to_formats") or ["md"]
         allowed = opts.get("from_formats")
-        # validate both lists exactly like the CLI (cli.py parse_args):
-        # a typo'd from_formats would otherwise silently yield an
-        # all-SKIPPED success, a typo'd to_formats documents with no
-        # content fields
-        bad = [f for f in to_formats if f not in _ALL_FORMATS]
-        if bad:
-            raise ValueError(f"unknown output format(s): {','.join(bad)}")
-        if allowed:
-            known = set(KNOWN_FORMATS) | set(_HINT_ALIASES)
-            bad = [f for f in allowed if f not in known]
-            if bad:
-                raise ValueError(
-                    f"unknown input format(s): {','.join(bad)}")
-        extracted, names = self._extract_sources(sources, opts, allowed)
-        try:
-            plan = extracted.select(
-                F.col("conv_id").alias("uid"), "status", "format",
-                "extracted_text", "errors")
-            for fmt in [f for f in to_formats if f in _ITEM_FORMATS]:
-                ser = export_items(
-                    extracted.select(F.col("conv_id").alias("uid"),
-                                     "items"),
-                    fmt=fmt, keep_cols=("uid",))
-                plan = plan.join(ser, "uid", "left")
-            docs: list[dict | None] = [None] * len(names)
-            statuses: list[str] = [""] * len(names)
-            for row in plan.toLocalIterator():
-                idx = int(row["uid"])
-                d = {"filename": names[idx]}
-                for fmt in to_formats:
-                    if fmt in ("md", "text"):
-                        d[f"{fmt}_content"] = row["extracted_text"]
-                    elif fmt == "json":
-                        # the client validates json_content as a
-                        # DoclingDocument OBJECT, not a string
-                        # (responses.py:67)
-                        d["json_content"] = (
-                            json.loads(row["json"])
-                            if row["json"] is not None else None)
-                    else:
-                        d[f"{fmt}_content"] = row[fmt]
-                d["errors"] = [
-                    {"component_type": "document_backend",
-                     "module_name": e["module"],
-                     "error_message": e["message"]}
-                    for e in (row["errors"] or [])]
-                statuses[idx] = row["status"]
-                docs[idx] = d
-            elapsed = time.monotonic() - t0
-            present = [(d, s) for d, s in zip(docs, statuses)
-                       if d is not None]
-            n_ok = sum(1 for _, s in present if s == "success")
-            overall = ("success" if n_ok == len(present)
-                       else "failure" if n_ok == 0
-                       else "partial_success")
-            if len(sources) == 1 and present:
-                # reference-exact ConvertDocumentResponse: singular
-                # `document`, flattened status/errors/processing_time
-                doc, status = present[0]
-                errors = doc.pop("errors")
-                return {"document": doc, "status": status,
-                        "errors": errors, "processing_time": elapsed}
-            return {"documents": [
-                        {**d, "status": s} for d, s in present],
-                    "status": overall,
-                    "processing_time": elapsed,
-                    "num_converted": len(present),
-                    "num_succeeded": n_ok,
-                    "num_failed": sum(1 for _, s in present
-                                      if s == "failure")}
-        finally:
-            extracted.unpersist()
+        df, names = self._sources_df(body.get("sources") or [])
+        # validated exactly like the CLI's --to and --from
+        check_formats(to_formats, allowed, CONTENT_FORMATS)
+        docs = []
+        for name, res in zip(names, convert_batch(
+                df, names, to_formats, allowed_formats=allowed,
+                pdf_passwords=opts.get("pdf_passwords") or ())):
+            d = {"filename": name}
+            for fmt in to_formats:
+                content = res[f"{fmt}_content"]
+                if fmt == "json" and content is not None:
+                    # the client validates json_content as a
+                    # DoclingDocument OBJECT, not a string
+                    # (responses.py:67)
+                    content = json.loads(content)
+                d[f"{fmt}_content"] = content
+            d["errors"] = [
+                {"component_type": "document_backend",
+                 "module_name": e["module"],
+                 "error_message": e["message"]}
+                for e in res["errors"]]
+            d["status"] = res["status"]
+            docs.append(d)
+        elapsed = time.monotonic() - t0
+        if len(docs) == 1:
+            # reference-exact ConvertDocumentResponse: singular
+            # `document`, flattened status/errors/processing_time
+            doc = docs[0]
+            errors = doc.pop("errors")
+            return {"document": doc, "status": doc.pop("status"),
+                    "errors": errors, "processing_time": elapsed}
+        n_ok = sum(d["status"] == "success" for d in docs)
+        return {"documents": docs,
+                "status": ("success" if n_ok == len(docs)
+                           else "failure" if n_ok == 0
+                           else "partial_success"),
+                "processing_time": elapsed,
+                "num_converted": len(docs),
+                "num_succeeded": n_ok,
+                "num_failed": sum(d["status"] == "failure" for d in docs)}
 
 
 def make_handler(service: JobService):

@@ -11,7 +11,7 @@ chunk granularity — otherwise chunk after filtering.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from docling_spark.operators.textstats import norm_text, token_count
@@ -418,16 +418,3 @@ def hybrid_chunks(
     if with_provenance:
         schema += ", doc_items array<bigint>"
     return packed.mapInPandas(run, schema)
-
-
-def chunk_char_spans(chunks: DataFrame, text_col: str = "chunk_text") -> Column:
-    """Length accounting for chunk provenance: cumulative char offset per
-    doc — window sum, mirrors ProvenanceItem.charspan bookkeeping."""
-    from pyspark.sql.window import Window
-
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("chunk_idx")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return F.coalesce(F.sum(F.length(text_col) + 1).over(w), F.lit(0))

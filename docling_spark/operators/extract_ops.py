@@ -29,7 +29,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from docling_spark.engine.extract import DEFAULT_MAX_BYTES, extract_payload
+from docling_spark.engine.extract import (
+    DEFAULT_MAX_BYTES, STATUS_SKIPPED, _result, extract_payload,
+)
 from docling_spark.schema import EXTRACTED_SCHEMA
 
 def _extract_batches(
@@ -65,20 +67,11 @@ def _extract_batches(
                 # granularity, base_pipeline.py:301-320). Rows never
                 # attempted are SKIPPED, not failed: a rerun must be able
                 # to tell "never ran" from "parsed and broke"
-                res = {
-                    "status": "skipped",
-                    "format": "plain",
-                    "extracted_text": "",
-                    "items": [],
-                    "errors": [
-                        {"module": "operator",
-                         "message": "batch time budget exceeded before "
-                                    "this row was attempted",
-                         "category": "timeout"}
-                    ],
-                    "metrics": {"pages_parsed": 0, "boilerplate_ratio": 0.0,
-                                "parse_score": 0.0, "n_items": 0},
-                }
+                res = _result(STATUS_SKIPPED, "plain", [
+                    {"module": "operator",
+                     "message": "batch time budget exceeded before this "
+                                "row was attempted",
+                     "category": "timeout"}])
             else:
                 res = extract_payload(
                     text if text is None or isinstance(text, str) else str(text),

@@ -44,10 +44,6 @@ def token_count(col) -> Column:
     return F.when(F.trim(col) == "", F.lit(0)).otherwise(F.size(tokens(col)))
 
 
-def char_count(col) -> Column:
-    return F.length(col)
-
-
 def avg_token_len(col) -> Column:
     """Mean token length: (chars excluding separators) / tokens."""
     n_tok = token_count(col)

@@ -209,11 +209,19 @@ class TestDispatcherReviewFixes:
         assert r["status"] == "success"
 
     def test_known_formats_covers_every_detected_format(self):
-        from docling_spark.engine.extract import KNOWN_FORMATS, detect_format
+        from docling_spark.engine.extract import (
+            _FORMATS, KNOWN_FORMATS, detect_format, extract_payload,
+        )
 
+        assert KNOWN_FORMATS == tuple(_FORMATS)
+        for name, spec in _FORMATS.items():
+            for hint in (name, *spec.aliases):
+                assert detect_format("x", hint) == name, hint
+                res = extract_payload("x", hint)
+                assert res["format"] == name, hint
+                assert res["status"] in ("success", "partial_success",
+                                         "failure"), hint
         probes = ["%PDF-1.4 x", "0M8R4KGxGARBAGE###not-base64"]
-        for hint in ("wav", "png", "doc", "xls", "ppt"):
-            assert detect_format("x", hint) in KNOWN_FORMATS, hint
         for p in probes:
             assert detect_format(p) in KNOWN_FORMATS, p
 
