@@ -43,6 +43,9 @@ _EXTENSIONS = {"md": "md", "text": "txt", "json": "json", "yaml": "yaml",
 _B64_FORMATS = frozenset({"dclx"})
 # seconds one service request may take on top of the ?wait= long poll
 _HTTP_TIMEOUT_S = 30.0
+# seconds a submitted task may stay pending or running before the client
+# gives up on it
+_TASK_DEADLINE_S = 3600.0
 
 
 def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
@@ -296,7 +299,8 @@ def _remote_task(base: str, path: str, body: dict, wait: float,
                  verbose: bool) -> "tuple[str, dict]":
     """Submit → ?wait= poll → fetch against a docling-spark service:
     (terminal task_status, result body). An unreachable or failing
-    service is a ``failure`` whose body names the error."""
+    service, or a task not done within ``_TASK_DEADLINE_S``, is a
+    ``failure`` whose body names the error."""
     import time
     import urllib.request
 
@@ -309,12 +313,17 @@ def _remote_task(base: str, path: str, body: dict, wait: float,
             task_id = json.loads(resp.read())["task_id"]
         if verbose:
             print(f"task {task_id} submitted to {path}")
+        deadline = time.monotonic() + _TASK_DEADLINE_S
         while True:
             poll = f"{base}/v1/status/poll/{task_id}?wait={wait}"
             with urllib.request.urlopen(poll, timeout=timeout) as resp:
                 st = json.loads(resp.read())
             if st["task_status"] in ("success", "failure"):
                 break
+            if time.monotonic() >= deadline:
+                return "failure", {
+                    "error": f"task {task_id} still {st['task_status']} "
+                             f"after {_TASK_DEADLINE_S:g} s"}
             time.sleep(wait)
         with urllib.request.urlopen(f"{base}/v1/result/{task_id}",
                                     timeout=timeout) as resp:

@@ -7,39 +7,52 @@ the 10^12-turn / 1000-executor regime:
 - **Partitioning**: output is written partitioned by ``conv_bucket =
   pmod(xxhash64(conv_id), n_buckets)`` — the parquet stand-in for Iceberg's
   ``bucket(N, conv_id)`` transform (this sandbox has no Iceberg runtime; the
-  write path is isolated here so the table format can swap in).
+  write path is isolated here so the table format can swap in). Rows are
+  rebalanced on the bucket and sorted by ``(conv_bucket, conv_id,
+  turn_idx)`` before the write: each bucket gets one writer, and every
+  file is sorted by ``(conv_id, turn_idx)``.
 - **Skew/salting**: extraction itself is per-row, so long conversations are
   spread with ``repartition(salt)`` where ``salt = xxhash64(conv_id,
   turn_idx) % parallelism`` — no conversation-level hotspot no matter how
   skewed turn counts are (SURVEY.md §7.4.5: salting must not affect
   correctness, and cannot, because extraction is conversation-agnostic).
-  Files are sorted within partitions, but parquet read-back gives NO
-  cross-split row-order guarantee — consumers needing stable turn order
-  re-establish it with ``extract_ops.with_turn_rank`` (window rank on
-  the unsalted key); this job deliberately does not pay that window.
+  On the write side a bucket is the unit, and every row of one
+  conversation shares it; AQE's rebalance splits an oversized bucket (a
+  mega-conversation's included) into several files, each still sorted.
+  Parquet read-back gives NO cross-file row-order guarantee — consumers
+  needing stable turn order re-establish it with
+  ``extract_ops.with_turn_rank`` (window rank on the unsalted key); this
+  job deliberately does not pay that window.
 - **Resume**: completed buckets are recorded in a state table; a rerun
   anti-joins input buckets against completed ones and processes only the
   remainder (ConversionAssets save/load analog,
   docling/datamodel/document.py:431-584). Bucket writes are idempotent
   (dynamic partition overwrite).
+- **Run counters**: status counts and the set of buckets written come
+  from one ``Observation`` on the write itself, so no pass over the input
+  or the output is spent on bookkeeping.
 - **Metrics sidecar**: per-partition counters aggregated with one narrow
-  groupBy over ``spark_partition_id()`` (FIXTURES.md §4; the reference's
-  ProfilingItem/ConfidenceReport analog).
+  groupBy over ``spark_partition_id()`` of a read-back scoped to this
+  run's buckets, one row per read split (FIXTURES.md §4; the reference's
+  ProfilingItem/ConfidenceReport analog). It is the only read-back, and
+  runs only when ``metrics_path`` is set.
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-
 from pyspark.sql import types as T
 
+from docling_spark.engine.extract import (STATUS_FAILURE, STATUS_PARTIAL,
+                                          STATUS_SKIPPED, STATUS_SUCCESS)
 from docling_spark.operators.extract_ops import extract_turns
 from docling_spark.schema import EXTRACTED_SCHEMA
 
 DEFAULT_BUCKETS = 64
+STATUSES = (STATUS_SUCCESS, STATUS_PARTIAL, STATUS_FAILURE, STATUS_SKIPPED)
 
 # output schema incl. the physical partition column (explicit schema on
 # read-back: no inference listing, and empty outputs stay readable)
@@ -167,32 +180,30 @@ def run_extract(
         if done_buckets:
             df = df.filter(~F.col("conv_bucket").isin(sorted(done_buckets)))
 
-    # the buckets THIS run processes, computed from the input before the
-    # heavy extraction (a narrow distinct over the hashed key): read-back
-    # bookkeeping is scoped to exactly these — dynamic partition
-    # overwrite PRESERVES partitions this run didn't touch, so an
-    # unscoped read-back would count stale buckets from prior runs into
-    # this run's counters/sidecar and wrongly mark them done
-    processed_buckets = {
-        int(r["conv_bucket"])
-        for r in df.select("conv_bucket").distinct().collect()
-    }
-
     df = salt_skew(df, parallelism)
     extracted = extract_turns(df.drop("conv_bucket"),
                               pdf_passwords=pdf_passwords,
                               allowed_formats=allowed_formats)
     extracted = extracted.withColumn("conv_bucket", bucket_col(n_buckets))
 
+    # run counters ride along with the write: attached after the last
+    # exchange, so the result stage counts every written row exactly once
+    # (no pre-pass over the input, no read-back aggregate)
+    obs = Observation()
     (
         extracted
-        # spread on (bucket, conv_id), NOT bucket alone: one task per
-        # bucket would funnel a mega-conversation's full extracted
-        # payloads through a single reducer — the very hotspot the
-        # salting avoided. partitionBy does not need bucket colocation;
-        # multiple tasks may write files into the same bucket directory.
-        .repartition(F.col("conv_bucket"), F.col("conv_id"))
-        .sortWithinPartitions("conv_id", "turn_idx")
+        # one writer per bucket: rows rebalance on the bucket alone, and
+        # AQE splits an oversized bucket (a mega-conversation included)
+        # into several sorted files. The sort leads with the partition
+        # column, so it satisfies the planned write's required ordering
+        # and survives into the files: each one is sorted by
+        # (conv_id, turn_idx)
+        .hint("rebalance", "conv_bucket")
+        .observe(obs,
+                 *(F.count_if(F.col("status") == s).alias(s)
+                   for s in STATUSES),
+                 F.collect_set("conv_bucket").alias("buckets"))
+        .sortWithinPartitions("conv_bucket", "conv_id", "turn_idx")
         .write.mode("overwrite")
         # writer-scoped, NOT session conf: mutating the shared session's
         # partitionOverwriteMode would silently change the semantics of
@@ -201,19 +212,14 @@ def run_extract(
         .partitionBy("conv_bucket")
         .parquet(output_path)
     )
+    observed = obs.get
+    counts = {s: observed[s] for s in STATUSES if observed[s]}
+    # the buckets THIS run wrote: state and sidecar are scoped to exactly
+    # these, because dynamic partition overwrite PRESERVES partitions
+    # this run didn't touch
+    processed_buckets = sorted(observed["buckets"])
 
-    # read-back scoped to THIS run's buckets only: counts and sidecar
-    # reflect exactly the work this run did, never stale partitions
-    # preserved on disk by dynamic overwrite
-    out = spark.read.schema(OUTPUT_SCHEMA).parquet(output_path)
-    out = out.filter(F.col("conv_bucket").isin(sorted(processed_buckets))
-                     if processed_buckets else F.lit(False))
-    counts = {
-        r["status"]: r["n"]
-        for r in out.groupBy("status").agg(F.count("*").alias("n")).collect()
-    }
-
-    if state_path:
+    if state_path and processed_buckets:
         # APPEND-ONLY state log, committed BEFORE the metrics append:
         # (a) append is all-or-nothing at job-commit level, so a crash
         # mid-write can never destroy prior state the way the old
@@ -222,18 +228,22 @@ def run_extract(
         # (c) state-before-metrics bounds a crash between the two writes
         # to under-reported metrics, never the double-count that
         # state-after-metrics allowed. Readers take the union of all
-        # appended rows (a bucket is done if any row says done).
-        state_rows = [(run_id, b, "done", n_buckets)
-                      for b in sorted(processed_buckets)]
-        if state_rows:
-            spark.createDataFrame(
-                state_rows,
-                "run_id string, conv_bucket int, status string, "
-                "n_buckets int",
-            ).withColumn("ts", F.current_timestamp()) \
-                .write.mode("append").parquet(state_path)
+        # appended rows (a bucket is done if any row says done). Rows
+        # are JVM literals: no Python worker pass for a few dozen ints
+        spark.range(1).select(
+            F.lit(run_id).alias("run_id"),
+            F.explode(F.array(*map(F.lit, processed_buckets)))
+            .alias("conv_bucket"),
+            F.lit("done").alias("status"),
+            F.lit(n_buckets).alias("n_buckets"),
+            F.current_timestamp().alias("ts"),
+        ).write.mode("append").parquet(state_path)
 
     if metrics_path:
+        # the one read-back left, scoped to this run's buckets
+        out = spark.read.schema(OUTPUT_SCHEMA).parquet(output_path)
+        out = out.filter(F.col("conv_bucket").isin(processed_buckets)
+                         if processed_buckets else F.lit(False))
         sidecar_metrics(out, run_id,
                         wall_ms=int((time.time() - t0) * 1000)) \
             .write.mode("append").parquet(metrics_path)

@@ -82,3 +82,51 @@ def test_convert_remote_unreachable_service(tmp_path):
     assert proc.returncode == 1
     assert "Traceback" not in proc.stderr
     assert len(proc.stderr.strip().splitlines()) == 1
+
+
+def test_convert_remote_gives_up_on_a_task_that_stays_pending(
+        tmp_path, monkeypatch, capsys):
+    """A service that reports the task pending forever hits the client's
+    task deadline: one stderr line naming the task, exit code 1, no
+    traceback."""
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    import docling_spark.cli as cli
+
+    class Pending(BaseHTTPRequestHandler):
+        def _json(self, body: dict) -> None:
+            data = json.dumps(body).encode()
+            self.send_response(200)
+            self.send_header("Content-Type", "application/json")
+            self.send_header("Content-Length", str(len(data)))
+            self.end_headers()
+            self.wfile.write(data)
+
+        def do_POST(self):
+            self.rfile.read(int(self.headers["Content-Length"]))
+            self._json({"task_id": "stuck-task-7"})
+
+        def do_GET(self):
+            self._json({"task_id": "stuck-task-7",
+                        "task_status": "pending"})
+
+        def log_message(self, *args):
+            pass
+
+    server = ThreadingHTTPServer(("127.0.0.1", 0), Pending)
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    monkeypatch.setattr(cli, "_TASK_DEADLINE_S", 0.3)
+    src = tmp_path / "doc.html"
+    src.write_text("<h1>T</h1>")
+    try:
+        code = cli.main(["convert-remote", str(src),
+                         "--url", f"http://127.0.0.1:{server.server_port}",
+                         "--poll-interval", "0.05",
+                         "--output", str(tmp_path / "out")])
+    finally:
+        server.shutdown()
+    err = capsys.readouterr().err
+    assert code == 1
+    assert "Traceback" not in err
+    assert len(err.strip().splitlines()) == 1
+    assert "stuck-task-7" in err

@@ -221,3 +221,71 @@ def test_corrupt_state_raises_instead_of_fresh_start(spark, tmp_path):
     with pytest.raises(Exception):
         run_extract(spark, tr, out, run_id="r1", n_buckets=8,
                     state_path=state)
+
+
+def test_written_files_sorted_one_per_bucket(spark, transcripts, tmp_path):
+    """Each bucket gets one writer, and every part file is sorted by the
+    turn key: the planned write keeps the job's sort."""
+    import pyarrow.parquet as pq
+
+    out = tmp_path / "out"
+    run_extract(spark, transcripts, str(out), run_id="r1", n_buckets=8)
+    buckets = sorted(out.glob("conv_bucket=*"))
+    assert buckets
+    for bucket in buckets:
+        parts = sorted(bucket.glob("part-*.parquet"))
+        assert len(parts) == 1, bucket.name
+        for part in parts:
+            rows = pq.read_table(part, columns=["conv_id", "turn_idx"])
+            keys = list(zip(rows["conv_id"].to_pylist(),
+                            rows["turn_idx"].to_pylist()))
+            assert keys == sorted(keys), part
+
+
+def _status_counts(spark, out: str, buckets) -> dict:
+    written = spark.read.parquet(out).filter(
+        F.col("conv_bucket").isin(sorted(buckets)))
+    return {r["status"]: r["count"]
+            for r in written.groupBy("status").count().collect()}
+
+
+def test_counters_match_written_rows(spark, transcripts, tmp_path):
+    """counts/total come from the write itself; they equal a groupBy over
+    the run's buckets in the written table, fresh and on resume. A
+    resume with nothing left counts nothing and appends no state."""
+    from docling_spark.jobs.extract_job import bucket_col
+
+    out = str(tmp_path / "out")
+    state = str(tmp_path / "state")
+    fresh = run_extract(spark, transcripts, str(tmp_path / "fresh"),
+                        run_id="f", n_buckets=8)
+    want = _status_counts(spark, str(tmp_path / "fresh"), range(8))
+    assert fresh["counts"] == want
+    assert fresh["total"] == sum(want.values()) == transcripts.count()
+
+    half = transcripts.withColumn("b", bucket_col(8)) \
+        .filter(F.col("b") < 4).drop("b")
+    r1 = run_extract(spark, half, out, run_id="r1", n_buckets=8,
+                     state_path=state)
+    r2 = run_extract(spark, transcripts, out, run_id="r2", n_buckets=8,
+                     state_path=state)
+    st = spark.read.parquet(state)
+    for res, run in ((r1, "r1"), (r2, "r2")):
+        mine = {r["conv_bucket"] for r in
+                st.filter(F.col("run_id") == run).collect()}
+        assert mine
+        want = _status_counts(spark, out, mine)
+        assert res["counts"] == want
+        assert res["total"] == sum(want.values())
+    assert r1["total"] + r2["total"] == transcripts.count()
+
+    n_state = st.count()
+    r3 = run_extract(spark, transcripts, out, run_id="r3", n_buckets=8,
+                     state_path=state)
+    assert r3["counts"] == {}
+    assert r3["total"] == 0
+    st = spark.read.parquet(state)
+    assert st.count() == n_state
+    assert st.schema.simpleString() == (
+        "struct<run_id:string,conv_bucket:int,status:string,"
+        "n_buckets:int,ts:timestamp>")
