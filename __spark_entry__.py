@@ -1020,11 +1020,12 @@ def q_embed_cosine_pairs(spark, sf_dir):
     """Near-dup embedding pairs, LSH-gated (r1 shipped the exact n²
     BroadcastNestedLoopJoin here — the textbook 100 TB scale-killer; the
     n² variant survives only as the recall test oracle,
-    tests/test_similarity_recall.py). Buckets are capped at their 64
-    smallest-id representatives before the self-join (r3's minhash
-    hot-bucket bound extended to the embedding side — m identical
-    embeddings collide in EVERY band, so the uncapped join was the last
-    m² exposure in the dedup surface). The oracle below expresses the
+    tests/test_round2_fixes.py::test_cosine_pairs_lsh_subset_and_recall).
+    Buckets are capped at their 64 smallest-id representatives before
+    each bucket's pairs are scored (r3's minhash hot-bucket bound
+    extended to the embedding side — m identical embeddings collide in
+    EVERY band, so an uncapped bucket was the last m² exposure in the
+    dedup surface). The oracle below expresses the
     SAME banded gating AND the same cap with literal plane constants, so
     the comparison is exact, not recall-fuzzy."""
     from docling_spark.operators.similarity import cosine_pairs_lsh
@@ -1833,10 +1834,11 @@ _ANN_DIM = 64
 
 def q_ann_bucket_pairs(spark, sf_dir):
     """Same-bucket ANN candidate pairs under single-table sign-LSH,
-    bucket-capped at 64 smallest-id representatives before the self-join
-    (with _ANN_PLANES planes there are only 2^_ANN_PLANES distinct bucket
-    values, so the uncapped join was ~m²/2^planes at ANY corpus size —
-    the r3 verdict's last uncapped-join finding)."""
+    bucket-capped at 64 smallest-id representatives before each bucket's
+    pairs are scored (with _ANN_PLANES planes there are only
+    2^_ANN_PLANES distinct bucket values, so an uncapped bucket costs
+    ~m²/2^planes pairs at ANY corpus size — the r3 verdict's last
+    uncapped-join finding)."""
     from docling_spark.operators.similarity import ann_bucket_pairs
 
     return ann_bucket_pairs(

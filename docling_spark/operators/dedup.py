@@ -266,27 +266,37 @@ def minhash_signature_array(
     )
 
 
-def cap_buckets(banded: DataFrame, max_bucket: int) -> DataFrame:
-    """Deterministic per-(band_id, bucket) representative cap: keep the
-    ``max_bucket`` smallest doc_ids of each bucket, drop the rest.
+def cap_buckets(
+    banded: DataFrame, max_bucket: int,
+    keys: tuple[str, ...] = ("band_id", "bucket"), id_col: str = "doc_id",
+) -> DataFrame:
+    """Deterministic per-bucket representative cap, shared by every LSH
+    family (minhash bands, simhash chunks, embedding sign-LSH): keep the
+    ``max_bucket`` smallest ``id_col`` values of each ``keys`` bucket,
+    drop the rest.
 
     Why: a bucket self-join is m² in the bucket population. A
     template/boilerplate-heavy corpus at 100 TB lands millions of
-    near-identical docs in one (band, bucket) → m² pairs in one reducer.
-    Capping bounds every bucket's pair count at max_bucket² regardless of
-    corpus shape — the batch analog of the streaming path's 64-signature
-    state bound (streaming/stateful.py). Run :func:`exact_dedup` FIRST so
-    byte-identical texts (the usual mega-bucket cause) are already gone;
-    what the cap then drops is near-dup recall among 65th-and-later
-    members of a still-hot bucket, which :func:`lsh_bucket_overflow`
-    surfaces rather than hiding.
+    near-identical docs in one bucket → m² pairs in one reducer — and
+    for embeddings, m identical vectors collide in EVERY band no matter
+    how many planes are used. Capping bounds every bucket's pair count at
+    max_bucket² regardless of corpus shape — the batch analog of the
+    streaming path's 64-signature state bound (streaming/stateful.py).
+    Run :func:`exact_dedup` FIRST so byte-identical texts (the usual
+    mega-bucket cause) are already gone; what the cap then drops is
+    near-dup recall among 65th-and-later members of a still-hot bucket,
+    which the overflow companions (:func:`lsh_bucket_overflow`,
+    :func:`simhash_chunk_overflow`,
+    ``similarity.embedding_bucket_overflow``) surface rather than hide.
 
-    The window shuffles on the same (band_id, bucket) key the candidate
-    join needs anyway, so the cap adds no new shuffle stage shape.
+    A ``row_number`` window filtered to ``<= max_bucket``: Spark adds a
+    map-side ``WindowGroupLimit`` before the exchange, and the window's
+    hash partitioning on ``keys`` is the one the pair step that follows
+    needs, so the cap adds no shuffle of its own.
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy("band_id", "bucket").orderBy("doc_id")
+    w = Window.partitionBy(*keys).orderBy(id_col)
     return (
         banded.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= max_bucket)
@@ -805,14 +815,7 @@ def simhash_near_pairs(sim: DataFrame, max_hamming: int = 3,
         raise ValueError("pigeonhole exactness needs max_hamming < chunks")
     banded = _simhash_banded(sim, bits, chunks)
     if max_bucket is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("chunk_id", "chunk").orderBy("doc_id")
-        banded = (
-            banded.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= max_bucket)
-            .drop("_rn")
-        )
+        banded = cap_buckets(banded, max_bucket, ("chunk_id", "chunk"))
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(b, (F.col("a.chunk_id") == F.col("b.chunk_id"))

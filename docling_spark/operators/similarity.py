@@ -10,6 +10,13 @@
   the md5 hash family (deterministic, no RNG state): each vector gets a
   ``n_planes``-bit bucket; ANN probes only its bucket. Recall is validated
   against brute force in tests.
+- **per-bucket pair scoring** — the LSH pair families
+  (:func:`cosine_pairs_lsh`, :func:`ann_bucket_pairs`) cap each bucket
+  with ``dedup.cap_buckets`` and hand every capped bucket to Python once,
+  as one Arrow table of its ids and vectors, which scores all of its
+  pairs in numpy (:func:`_bucket_cosine_pairs`). One exchange on the
+  bucket key, no join, and no vector crosses the Arrow boundary more than
+  once per (vector, bucket).
 """
 
 from __future__ import annotations
@@ -53,13 +60,17 @@ def cosine_fast(a, b):
 
     Catalyst higher-order functions (aggregate/zip_with) run interpreted —
     ~10x slower per evaluation than this vectorized kernel once the pair
-    count is large (LSH/IVF bucket joins). Results agree with ``cosine``
-    to double-precision rounding (both are 64-bit dot/norm; callers round
-    to 6 decimals before comparison, as the oracles do)."""
+    count is large. Results agree with ``cosine`` to double-precision
+    rounding (both are 64-bit dot/norm; callers round to 6 decimals before
+    comparison, as the oracles do). A row scores iff both vectors are
+    non-null and of equal length — the JVM ``zip_with`` rule, decided per
+    row and never by what else shares the Arrow batch."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import DoubleType
+
+    from docling_spark.functions.cosine import cosine_rows
 
     def _cos(x, y):
         # null → null, like the JVM `cosine` expression this replaces —
@@ -67,32 +78,16 @@ def cosine_fast(a, b):
         # Nullable Float64 (not float64/NaN): Spark orders NaN ABOVE
         # every number, so a NaN score would win desc rankings; a true
         # null drops out of filters and sorts last.
-        valid = (x.notna() & y.notna()).to_numpy()
         out = pd.Series(pd.NA, index=x.index, dtype="Float64")
-        if valid.any():
-            xs = x[valid].to_numpy()
-            ys = y[valid].to_numpy()
-            # ragged guard: one corrupt short embedding must not
-            # np.stack-crash the task — route rows whose length differs
-            # from the batch's modal length to NULL (the JVM zip_with
-            # path nulls them too)
-            lens = np.fromiter((len(v) for v in xs), dtype=np.int64,
-                               count=len(xs))
-            lens_y = np.fromiter((len(v) for v in ys), dtype=np.int64,
-                                 count=len(ys))
-            mode = np.bincount(lens).argmax() if len(lens) else 0
-            ok = (lens == mode) & (lens_y == mode)
-            if ok.any():
-                xa = np.stack(xs[ok])
-                ya = np.stack(ys[ok])
-                num = np.einsum("ij,ij->i", xa, ya)
-                den = np.linalg.norm(xa, axis=1) * np.linalg.norm(ya, axis=1)
-                # zero-norm → NaN→NA (dropped), matching the JVM
-                # try_divide NULL; errstate silences the per-batch warning
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sim = np.where(den == 0.0, np.nan, num / den)
-                vidx = np.flatnonzero(valid)
-                out.iloc[vidx[ok]] = sim
+        idx = np.flatnonzero((x.notna() & y.notna()).to_numpy())
+        xs, ys = x.to_numpy()[idx], y.to_numpy()[idx]
+        lx = np.fromiter(map(len, xs), dtype=np.int64, count=len(xs))
+        ly = np.fromiter(map(len, ys), dtype=np.int64, count=len(ys))
+        # ragged rows stay NULL; rows are stacked one length at a time
+        for n in np.unique(lx[lx == ly]):
+            sel = np.flatnonzero((lx == n) & (ly == n))
+            out.iloc[idx[sel]] = cosine_rows(np.stack(xs[sel]),
+                                             np.stack(ys[sel]))
         return out
 
     # real (non-string) hints: `from __future__ import annotations` would
@@ -166,47 +161,16 @@ def banded_lsh_buckets(
     )
 
 
-def cap_vector_buckets(
-    banded: DataFrame, max_bucket: int,
-    key_cols: tuple[str, ...] = ("band", "bucket"), id_col: str = "vec_id",
-) -> DataFrame:
-    """Deterministic per-bucket representative cap for embedding LSH — the
-    vector twin of dedup.cap_buckets: keep the ``max_bucket`` smallest ids
-    of each bucket key, drop the rest.
-
-    Why: every bucket SELF-join is m² in the bucket population, and the
-    population LSH cannot bound is exactly the one dedup targets — m
-    near-identical embeddings (mirrored/boilerplate content at 100 TB)
-    collide in EVERY band, so one hot bucket costs m² pairs in one
-    reducer no matter how many planes are used (planes shrink random
-    collisions, not true duplicates). Capping bounds every bucket at
-    max_bucket² pairs regardless of corpus shape. What the cap drops is
-    near-dup recall among the (cap+1)-th-and-later members of a still-hot
-    bucket; :func:`embedding_bucket_overflow` surfaces that as a measured
-    number rather than a silent loss.
-
-    The window shuffles on the same bucket key the candidate join needs
-    anyway, so the cap adds no new shuffle shape.
-    """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*key_cols).orderBy(id_col)
-    return (
-        banded.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= max_bucket)
-        .drop("_rn")
-    )
-
-
 def embedding_bucket_overflow(
     emb: DataFrame, n_bands: int = 6, planes_per_band: int = 3,
     dim: int = 64, max_bucket: int = 64,
     vec_col: str = "embedding", id_col: str = "vec_id",
 ) -> DataFrame:
-    """Visibility companion to :func:`cap_vector_buckets` for the banded
-    sign-LSH path: one row per (band, bucket) whose population exceeds
-    ``max_bucket`` — (band, bucket, n_vecs, n_dropped). Emit/monitor this
-    beside any capped run so dropped near-dup recall is observable."""
+    """Visibility companion to the bucket cap (``dedup.cap_buckets``) for
+    the banded sign-LSH path: one row per (band, bucket) whose population
+    exceeds ``max_bucket`` — (band, bucket, n_vecs, n_dropped).
+    Emit/monitor this beside any capped run so dropped near-dup recall is
+    observable."""
     return (
         banded_lsh_buckets(emb, n_bands, planes_per_band, dim,
                            vec_col, id_col)
@@ -217,6 +181,58 @@ def embedding_bucket_overflow(
     )
 
 
+def _bucket_cosine_pairs(
+    banded: DataFrame, keys: tuple[str, ...], threshold: float,
+    max_bucket: int | None, vec_col: str, id_col: str,
+) -> DataFrame:
+    """``(*keys, id_a, id_b, cos)``: every ``id_a < id_b`` pair sharing a
+    ``keys`` bucket of ``banded`` whose cosine, rounded to 6 decimals, is
+    at least ``threshold``.
+
+    The bucket pair primitive of the embedding LSH families. Each bucket
+    is first cut to its ``max_bucket`` smallest ids by the JVM window cap
+    (``dedup.cap_buckets``; ``None`` only for sf-size oracles), then
+    ``groupBy(keys).applyInArrow`` hands each capped bucket to Python
+    once: its ids and vectors, not two vectors per candidate pair. The
+    kernel (``functions.cosine.score_bucket``) scores every pair with the
+    arithmetic of :func:`cosine_fast`, so scores are bit-identical to it,
+    and drops only pairs that cannot pass the filter (``cos < threshold -
+    1e-6``, or no score). Spark then applies the exact ``round(cos, 6) >=
+    threshold``. The cap's window and the grouping share one exchange on
+    the bucket key; there is no join.
+
+    A pair scores iff both vectors are non-null and of equal length (the
+    JVM ``zip_with`` rule); a null, ragged or zero-norm vector still takes
+    its cap slot. A null id takes a cap slot and pairs with nothing, and
+    a duplicated id never pairs with itself.
+    """
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    from docling_spark.functions.cosine import score_bucket
+    from docling_spark.operators.dedup import cap_buckets
+
+    rows = banded.select(*keys, id_col,
+                         F.col(vec_col).cast("array<double>").alias("_v"))
+    if max_bucket is not None:
+        rows = cap_buckets(rows, max_bucket, keys, id_col)
+    fields = {f.name: f for f in rows.schema.fields}
+    id_type = fields[id_col].dataType
+    schema = StructType(
+        [fields[k] for k in keys]
+        + [StructField("id_a", id_type), StructField("id_b", id_type),
+           StructField("cos", DoubleType())])
+    floor = threshold - 1e-6
+
+    def _score(table):
+        return score_bucket(table, keys, id_col, floor)
+
+    return (
+        rows.groupBy(*keys).applyInArrow(_score, schema)
+        .withColumn("cos", F.round("cos", 6))
+        .filter(F.col("cos") >= threshold)
+    )
+
+
 def cosine_pairs_lsh(
     emb: DataFrame, threshold: float = 0.45,
     n_bands: int = 6, planes_per_band: int = 3, dim: int = 64,
@@ -224,15 +240,19 @@ def cosine_pairs_lsh(
     max_bucket: int | None = 64,
 ) -> DataFrame:
     """Embedding near-dup pairs, LSH-gated — the 100 TB shape of
-    ``cosine_pairs``. Candidates come from a (band, bucket) equi-join
-    (shuffle cost ~ sum over buckets of bucket², never n²), deduped across
-    bands BEFORE scoring so each surviving pair pays exactly one cosine.
-    Scoring is the Arrow-batched numpy kernel. The exact n² variant stays
-    as the small-scale test oracle (tests/test_similarity_recall.py).
+    ``cosine_pairs``. Vectors are banded (:func:`banded_lsh_buckets`) and
+    every (band, bucket) is scored in one pass by
+    :func:`_bucket_cosine_pairs`: cost ~ sum over buckets of bucket²,
+    never n², and each vector crosses into Python once per band rather
+    than once per candidate pair. A pair that collides in several bands
+    is scored in each; one ``dropDuplicates`` on the scored survivors
+    keeps it once. The exact n² variant stays as the small-scale test
+    oracle
+    (tests/test_round2_fixes.py::test_cosine_pairs_lsh_subset_and_recall).
 
     ``max_bucket`` (default 64, matching dedup.lsh_candidate_pairs and the
     streaming state bound) caps each (band, bucket) at its smallest-id
-    representatives BEFORE the self-join so a hot bucket — m identical
+    representatives BEFORE scoring so a hot bucket — m identical
     embeddings colliding in every band — can never cost m² pairs; pass
     ``None`` only for sf-size oracles. Pair with
     :func:`embedding_bucket_overflow` to observe what a cap dropped.
@@ -241,39 +261,11 @@ def cosine_pairs_lsh(
     buckets; recall for a pair at cosine c is 1-(1-(1-acos(c)/pi)^p)^b,
     ≈0.9996 at c=0.95 with the defaults here."""
     b = banded_lsh_buckets(emb, n_bands, planes_per_band, dim, vec_col, id_col)
-    if max_bucket is not None:
-        b = cap_vector_buckets(b, max_bucket, ("band", "bucket"), id_col)
-    # candidate generation and cross-band dedup run on BARE ID PAIRS —
-    # the candidate volume is sum-of-bucket² (measured 48x the vector
-    # count at bench scale; worse at corpus scale), so carrying two
-    # dim-sized double arrays (~1 KB/row at dim=64) through the join
-    # and dedup exchanges multiplies the dominant shuffle by ~60x.
-    # Vectors join back AFTER dedup, keyed by id over the n-row
-    # embedding table (AQE broadcasts it when small).
-    a = b.select(F.col(id_col).alias("id_a"), "band", "bucket")
-    c = b.select(F.col(id_col).alias("id_b"),
-                 F.col("band").alias("band_b"),
-                 F.col("bucket").alias("bucket_b"))
-    pairs = (
-        a.join(c, (F.col("band") == F.col("band_b"))
-               & (F.col("bucket") == F.col("bucket_b"))
-               & (F.col("id_a") < F.col("id_b")))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    v = emb.select(F.col(id_col).alias("_vid"),
-                   F.col(vec_col).cast("array<double>").alias("_v"))
-    cand = (
-        pairs
-        .join(v.select(F.col("_vid").alias("id_a"),
-                       F.col("_v").alias("va")), "id_a")
-        .join(v.select(F.col("_vid").alias("id_b"),
-                       F.col("_v").alias("vb")), "id_b")
-    )
     return (
-        cand.withColumn("cos", F.round(cosine_fast(F.col("va"), F.col("vb")), 6))
-        .filter(F.col("cos") >= threshold)
+        _bucket_cosine_pairs(b, ("band", "bucket"), threshold, max_bucket,
+                             vec_col, id_col)
         .select("id_a", "id_b", "cos")
+        .dropDuplicates(["id_a", "id_b"])
     )
 
 
@@ -316,33 +308,22 @@ def ann_bucket_pairs(
     max_bucket: int | None = 64,
 ) -> DataFrame:
     """Same-bucket candidate pairs under single-table sign-LSH
-    (:func:`lsh_buckets`), scored by the Arrow-batched cosine kernel.
+    (:func:`lsh_buckets`), scored per bucket by
+    :func:`_bucket_cosine_pairs`.
 
     ``max_bucket`` caps each bucket at its smallest-id representatives
-    before the self-join (see :func:`cap_vector_buckets` — with n_planes
-    planes there are only 2^n_planes distinct buckets, so without the cap
-    pair volume is ~m²/2^n_planes at ANY corpus size, and m² for a
-    near-dup-heavy bucket). Pass ``None`` only for sf-size oracles.
+    before scoring (see ``dedup.cap_buckets`` — with n_planes planes there
+    are only 2^n_planes distinct buckets, so without the cap pair volume
+    is ~m²/2^n_planes at ANY corpus size, and m² for a near-dup-heavy
+    bucket). Pass ``None`` only for sf-size oracles.
 
     Output: (id_a, id_b, bucket, cos) for a < b with cos ≥ threshold.
     """
     b = lsh_buckets(emb, n_planes, dim, vec_col, id_col)
-    if max_bucket is not None:
-        b = cap_vector_buckets(b, max_bucket, ("bucket",), id_col)
-    a = b.select(F.col(id_col).alias("id_a"),
-                 F.col(vec_col).cast("array<double>").alias("va"),
-                 F.col("bucket"))
-    c = b.select(F.col(id_col).alias("id_b"),
-                 F.col(vec_col).cast("array<double>").alias("vb"),
-                 F.col("bucket").alias("bucket_b"))
-    return (
-        a.join(c, (F.col("bucket") == F.col("bucket_b"))
-               & (F.col("id_a") < F.col("id_b")))
-        .withColumn("cos", F.round(cosine_fast(F.col("va"), F.col("vb")), 6))
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", F.col("bucket").cast("long").alias("bucket"),
-                "cos")
-    )
+    return _bucket_cosine_pairs(
+        b, ("bucket",), threshold, max_bucket, vec_col, id_col,
+    ).select("id_a", "id_b", F.col("bucket").cast("long").alias("bucket"),
+             "cos")
 
 
 def ivf_assign(
