@@ -841,9 +841,11 @@ left join batch_hit bh on bh.bdoc = s.doc_id
 
 def q_lsh_bucket_overflow(spark, sf_dir):
     """Visibility companion to the LSH bucket cap: which (band, bucket)
-    populations exceed the cap, and how many docs the cap drops. max_bucket
-    is set to 2 here so the sf-size corpus exercises real overflow rows;
-    production pairs this (at the production cap) with every capped run."""
+    populations exceed the cap, and how many docs the cap drops — the
+    minhash banding plus the one ``dedup.bucket_overflow`` count that the
+    simhash and embedding companions share. max_bucket is set to 2 here
+    so the sf-size corpus exercises real overflow rows; production pairs
+    this (at the production cap) with every capped run."""
     from docling_spark.operators.dedup import (
         lsh_bucket_overflow,
         minhash_signatures,
@@ -5296,10 +5298,12 @@ from f group by format
 def q_simhash_near_pairs(spark, sf_dir):
     """Near-duplicate detection by simhash Hamming distance ≤ 3 over
     60-bit signatures, exact-within-cap via pigeonhole banding (4 chunks
-    of 15 bits — 32768 buckets per chunk, vs 256 under the r3 32/8 split
-    whose pair volume grew as m²/256) with each (chunk_id, chunk) capped
-    at its 64 smallest-doc_id representatives before the self-join — the
-    r3 verdict's "What's wrong #2" bound. Never an n² join."""
+    of 15 bits — 32768 buckets per chunk, vs 256 under a 32/8 split whose
+    pair volume grew as m²/256) with each (chunk_id, chunk) capped at its
+    64 smallest-doc_id representatives before the grouped pair step
+    (``dedup._bucket_pairs``: one exchange on the chunk key, no join).
+    The oracle states the same pair set as a capped self-join. Never
+    n²."""
     from docling_spark.operators.dedup import simhash, simhash_near_pairs
 
     return simhash_near_pairs(

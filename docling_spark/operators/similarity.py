@@ -166,19 +166,16 @@ def embedding_bucket_overflow(
     dim: int = 64, max_bucket: int = 64,
     vec_col: str = "embedding", id_col: str = "vec_id",
 ) -> DataFrame:
-    """Visibility companion to the bucket cap (``dedup.cap_buckets``) for
-    the banded sign-LSH path: one row per (band, bucket) whose population
-    exceeds ``max_bucket`` — (band, bucket, n_vecs, n_dropped).
-    Emit/monitor this beside any capped run so dropped near-dup recall is
-    observable."""
-    return (
+    """``dedup.bucket_overflow`` of the banded sign-LSH path: one row per
+    (band, bucket) whose population exceeds ``max_bucket`` — (band,
+    bucket, n_vecs, n_dropped)."""
+    from docling_spark.operators.dedup import bucket_overflow
+
+    return bucket_overflow(
         banded_lsh_buckets(emb, n_bands, planes_per_band, dim,
-                           vec_col, id_col)
-        .groupBy("band", "bucket")
-        .agg(F.count("*").alias("n_vecs"))
-        .filter(F.col("n_vecs") > max_bucket)
-        .withColumn("n_dropped", F.col("n_vecs") - F.lit(max_bucket))
-    )
+                           vec_col, id_col),
+        ("band", "bucket"), max_bucket,
+    ).withColumnRenamed("n_docs", "n_vecs")
 
 
 def _bucket_cosine_pairs(
@@ -211,10 +208,10 @@ def _bucket_cosine_pairs(
     from docling_spark.functions.cosine import score_bucket
     from docling_spark.operators.dedup import cap_buckets
 
-    rows = banded.select(*keys, id_col,
-                         F.col(vec_col).cast("array<double>").alias("_v"))
-    if max_bucket is not None:
-        rows = cap_buckets(rows, max_bucket, keys, id_col)
+    rows = cap_buckets(
+        banded.select(*keys, id_col,
+                      F.col(vec_col).cast("array<double>").alias("_v")),
+        max_bucket, keys, id_col)
     fields = {f.name: f for f in rows.schema.fields}
     id_type = fields[id_col].dataType
     schema = StructType(

@@ -416,7 +416,9 @@ def _bounded_unigrams(corpus_toks: DataFrame,
     TakeOrderedAndProject (per-partition partial top-V, merged once) —
     no global sort.
 
-    ``scalars``: one row (n_total, v_eff, n_unk, unk_mean). ``v_eff``
+    ``scalars``: one row (n_total, v_eff, n_unk, unk_mean, vocab_all,
+    v_top) — the raw corpus type count and the retained one ride along
+    for :func:`lm_vocab_overflow`. ``v_eff``
     counts the retained types plus one ``<unk>`` type when anything
     overflowed; ``n_unk`` is the dropped tokens' total count and
     ``unk_mean`` the mean count of a dropped TYPE — every OOV token
@@ -451,6 +453,7 @@ def _bounded_unigrams(corpus_toks: DataFrame,
         ((F.col("n_total") - F.col("n_top"))
          / F.greatest(F.col("vocab_all") - F.col("v_top"), F.lit(1)))
         .alias("unk_mean"),
+        "vocab_all", "v_top",
     )
     return top, scalars
 
@@ -464,21 +467,15 @@ def lm_vocab_overflow(docs: DataFrame, text_col: str = "text",
     measured number, not a silent approximation."""
     toks = docs.select(
         F.explode(tokens(norm_text(F.col(text_col)))).alias("token"))
-    top, scalars = _bounded_unigrams(toks, max_vocab)
-    kept = top.agg(F.count("*").alias("vocab_kept"))
-    uni_all = toks.groupBy("token").agg(F.count("*").alias("n_t"))
-    all_tot = uni_all.agg(F.count("*").alias("vocab_all"))
+    _top, scalars = _bounded_unigrams(toks, max_vocab)
     return (
-        all_tot.crossJoin(kept).crossJoin(
-            scalars.select(F.col("n_unk").alias("unk_token_count")))
-        .filter(F.col("vocab_all") > F.col("vocab_kept"))
+        scalars.filter(F.col("vocab_all") > F.col("v_top"))
         .select(
             F.col("vocab_all").cast("bigint").alias("vocab_all"),
-            F.col("vocab_kept").cast("bigint").alias("vocab_kept"),
-            (F.col("vocab_all") - F.col("vocab_kept")).cast("bigint")
+            F.col("v_top").cast("bigint").alias("vocab_kept"),
+            (F.col("vocab_all") - F.col("v_top")).cast("bigint")
             .alias("dropped_types"),
-            F.col("unk_token_count").cast("bigint")
-            .alias("unk_token_count"),
+            F.col("n_unk").cast("bigint").alias("unk_token_count"),
         )
     )
 

@@ -387,8 +387,6 @@ def near_dedup_stream(docs: DataFrame, text_col: str = "text",
         minhash_signature_array,
     )
 
-    if num_hashes % band_size != 0:
-        raise ValueError("num_hashes must be divisible by band_size")
     sig = minhash_signature_array(F.col(text_col), num_hashes)
     # the ONE band-key definition (dedup.band_structs) — streaming bucket
     # keys must match the persisted batch LSH index byte-for-byte

@@ -4,10 +4,10 @@ The reference has no streaming runtime (SURVEY.md §2.i); its nearest analog
 is the bounded-queue threaded pipeline (standard_pdf_pipeline.py:155-311)
 with catch-up batch polling. Here the same extraction operator lifts to
 Structured Streaming unchanged because it is stateless per row:
-``readStream → extract_turns → writeStream`` with event-time watermarking
-on ``ts`` for the windowed metrics aggregation (late turns tolerated up to
-the watermark; WebVTT cue timings, webvtt_backend.py:164-178, are the
-reference's event-time analog).
+``readStream → extract_turns → writeStream``. Event-time watermarking on
+``ts`` bounds the state of the stream-stream join below (late turns
+tolerated up to the watermark; WebVTT cue timings,
+webvtt_backend.py:164-178, are the reference's event-time analog).
 
 Checkpointing: Spark's streaming checkpoint replaces the batch job's state
 table — exactly-once sink semantics per micro-batch.
@@ -42,40 +42,6 @@ def stream_extract(
     """The streaming plan: identical operator, streaming semantics free."""
     return extract_turns(transcripts, pdf_passwords=pdf_passwords,
                          allowed_formats=allowed_formats)
-
-
-def stream_metrics(
-    transcripts: DataFrame, watermark: str = "1 hour",
-    window: str = "5 minutes",
-    pdf_passwords: tuple[str, ...] = (),
-    allowed_formats: tuple[str, ...] | None = None,
-) -> DataFrame:
-    """Windowed extraction metrics with late-data handling: per (window,
-    status) counts under a 1-hour watermark (north-rule sidecar, streaming
-    flavor).
-
-    The watermark is applied AFTER extract_turns: mapInPandas discards
-    the event-time watermark of its input (applying it before left the
-    window aggregation unwatermarked — append mode rejected the plan,
-    update mode never evicted state or dropped late rows). ``ts`` passes
-    through extraction unchanged, so watermarking the extracted frame is
-    semantically identical."""
-    # same extraction POLICY as the data path: a metrics stream running
-    # a different password/format-policy set than run_stream would
-    # misreport the pipeline it monitors
-    ext = extract_turns(
-        transcripts, pdf_passwords=pdf_passwords,
-        allowed_formats=allowed_formats,
-    ).withWatermark("ts", watermark)
-    return (
-        ext.groupBy(F.window("ts", window), "status")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "status", "n",
-        )
-    )
 
 
 def run_stream(

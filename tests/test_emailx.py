@@ -2,7 +2,10 @@
 html-part delegation, routing, containment (reference semantics per
 docling/backend/email_backend.py:90-176)."""
 
+import base64
 import pathlib
+
+import pytest
 
 from docling_spark.engine.emailx import (
     extract_email,
@@ -12,7 +15,76 @@ from docling_spark.engine.extract import detect_format, extract_payload
 
 REF = pathlib.Path("/root/reference/tests/data/email/sources")
 
+needs_ref = pytest.mark.skipif(
+    not REF.exists(), reason="reference checkout not available")
 
+SIMPLE_EML = (
+    "From: Alice Example <alice@example.com>\n"
+    "To: Bob Example <bob@example.com>\n"
+    "Subject: Simple Email\n"
+    "MIME-Version: 1.0\n"
+    "Content-Type: text/plain; charset=utf-8\n"
+    "\n"
+    "Hello Bob,\n"
+    "\n"
+    "This is a simple email body.\n"
+)
+
+ATTACHMENT_EML = (
+    "From: Carol Example <carol@example.com>\n"
+    "To: Dave Example <dave@example.com>\n"
+    "Subject: Report\n"
+    "MIME-Version: 1.0\n"
+    'Content-Type: multipart/mixed; boundary="BOUNDARY"\n'
+    "\n"
+    "--BOUNDARY\n"
+    "Content-Type: text/plain; charset=utf-8\n"
+    "\n"
+    "Hi Dave,\n"
+    "\n"
+    "The report is attached.\n"
+    "\n"
+    "Best regards,\n"
+    "Carol\n"
+    "--BOUNDARY\n"
+    'Content-Type: text/plain; name="report.txt"\n'
+    'Content-Disposition: attachment; filename="report.txt"\n'
+    "Content-Transfer-Encoding: base64\n"
+    "\n"
+    + base64.b64encode(b"attachment file body\n").decode() + "\n"
+    "--BOUNDARY--\n"
+)
+
+
+def test_simple_eml():
+    text, items, _m = extract_email(SIMPLE_EML)
+    assert text == (
+        "# Simple Email\n\n"
+        "From: Alice Example <alice@example.com>\n\n"
+        "To: Bob Example <bob@example.com>\n\n"
+        "Hello Bob,\n\n"
+        "This is a simple email body."
+    )
+    assert items[1]["label"] == "title"
+    assert items[1]["text"] == "Simple Email"
+    assert [it["text"] for it in items[2:4]] == [
+        "From: Alice Example <alice@example.com>",
+        "To: Bob Example <bob@example.com>",
+    ]
+    # header/body items hang under the subject title
+    assert all(it["parent_idx"] == 1 for it in items[2:])
+
+
+def test_multipart_base64_attachment_excluded():
+    text, items, _m = extract_email(ATTACHMENT_EML)
+    assert items[1]["label"] == "title" and items[1]["text"] == "Report"
+    assert "attachment file" not in text
+    assert "report.txt" not in text
+    assert "The report is attached." in text
+    assert "Best regards," in text
+
+
+@needs_ref
 def test_reference_simple_eml():
     src = (REF / "eml_simple.eml").read_text()
     text, items, m = extract_email(src)
@@ -28,6 +100,7 @@ def test_reference_simple_eml():
     assert all(it["parent_idx"] == 1 for it in items[2:])
 
 
+@needs_ref
 def test_attachment_excluded():
     src = (REF / "eml_with_attachment.eml").read_text()
     text, _items, _m = extract_email(src)
