@@ -32,7 +32,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from docling_spark.operators.textstats import norm_text, token_count, tokens
+from docling_spark.operators.textstats import (
+    kgrams,
+    norm_text,
+    token_count,
+    tokens,
+)
 
 # Regexes in the Java/RE2 common subset (no lookaround, no backrefs) so the
 # DuckDB oracle applies byte-identical semantics.
@@ -48,14 +53,8 @@ def ngram_hashes(df: DataFrame, n: int, id_col: str = "doc_id",
     Tokenized with the shared whitespace splitter, lowercased, md5-hashed
     so the join key shuffled at scale is 32 bytes regardless of n."""
     toks = tokens(F.lower(F.col(text_col)))
-    # guard: sequence(0, x) runs DESCENDING when x < 0 (Spark default step
-    # -1), so short docs must short-circuit to an empty gram list
     grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i + 1, n))),
-        ),
+        F.size(toks) >= n, F.transform(kgrams(toks, n), F.md5),
     ).otherwise(F.array().cast("array<string>"))
     return df.select(
         F.col(id_col).alias("id"),
@@ -120,17 +119,9 @@ def top_bigram_stats(docs: DataFrame, text_col: str = "text",
     over non-space characters). explode → partial-agg groupBy(doc, gram)
     → max-by window-free reduction via a second groupBy: both shuffles key
     on (doc, gram)/(doc), skew-bounded by per-doc gram counts."""
-    toks = tokens(F.lower(F.col(text_col)))
-    grams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - 2),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     base = docs.select(
         F.col(id_col),
-        F.explode(grams).alias("gram"),
+        F.explode(kgrams(tokens(F.lower(F.col(text_col))), 2)).alias("gram"),
         F.length(F.regexp_replace(F.trim(F.lower(F.col(text_col))),
                                   r"\s+", "")).alias("n_chars"),
     )

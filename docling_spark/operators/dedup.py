@@ -4,18 +4,20 @@ Spark-first designs with their 100 TB rationale:
 
 - **exact_dedup** — hash-groupBy on a fingerprint; one shuffle on a short
   key, AQE handles skew. Never a pairwise comparison.
-- **shingles / minhash** — shingling EXPLODES then aggregates map-side; the
-  minhash signature is K independent mins computed in one groupBy (partial
-  aggregation makes the shuffle carry only K longs per doc, not the shingle
-  stream).
+- **shingles / minhash** — k-grams come from zipped shifted slices of
+  the token array, linear in document length; shingling EXPLODES then
+  aggregates map-side; the minhash signature is K independent mins
+  computed in one groupBy (partial aggregation makes the shuffle carry
+  only K longs per doc, not the shingle stream).
 - **LSH banding** — candidates group by band bucket: the only pairwise
   work happens inside a capped bucket (:func:`cap_buckets`,
   :func:`_bucket_pairs` — one exchange on the bucket key, no self-join),
   and :func:`bucket_overflow` counts what every family's cap drops.
   Scales as sum(bucket²) instead of n².
-- **simhash** — the bit vote unrolled into ``bits`` aggregates of one
-  groupBy per doc (partial-agg friendly); Hamming-near pairs come from
-  the same bucket pair step, keyed on simhash chunks.
+- **simhash** — token hashes built JVM-side per row, the bit vote one
+  row-local numpy pass behind a scalar Arrow UDF (no shuffle); Hamming-
+  near pairs come from the same bucket pair step, keyed on simhash
+  chunks.
 - **embedding near-dup** — cosine over an LSH/bucketed candidate set at
   scale (see similarity.py); the sf-size oracle variant is the n² join.
 
@@ -28,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from docling_spark.operators.textstats import norm_text
+from docling_spark.operators.textstats import bind, kgrams, norm_text
 
 
 def hash60(col) -> "F.Column":
@@ -128,15 +130,15 @@ def _shingle_array(text_col, k: int) -> "F.Column":
     definition shared by the batch explode path (:func:`shingles`) and the
     streaming per-row path (:func:`minhash_signature_array`), so the two
     engines' signatures can never drift (the bit-identical parity contract
-    is pinned by tests, but one definition makes drift impossible)."""
+    is pinned by tests, but one definition makes drift impossible).
+
+    Linear in document length: the k-grams come from
+    ``textstats.kgrams`` (shifted slices zipped once), so the document is
+    tokenized a fixed number of times, not once per shingle. A text of
+    fewer than ``k`` tokens hashes whole, as one shingle."""
     toks = F.split(norm_text(text_col), " ")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
     sh = F.when(
-        n >= k,
-        F.transform(
-            idx, lambda i: hash60(F.concat_ws(" ", F.slice(toks, i + 1, k)))
-        ),
+        F.size(toks) >= k, F.transform(kgrams(toks, k), hash60),
     ).otherwise(F.array(hash60(F.concat_ws(" ", toks))))
     return F.array_distinct(sh)
 
@@ -145,7 +147,7 @@ def shingles(docs: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
     """Distinct k-token shingles per document, 60-bit-hashed:
     (doc_id, shingle long).
 
-    Built with JVM-side array ops (transform over a sliced token array) —
+    Built with JVM-side array ops (transform over the token k-grams) —
     no Python worker in the path. Shingles leave this operator as hashed
     longs, not strings: every downstream consumer (minhash agg, shingle
     equi-join, per-doc set intersect) then shuffles/compares 8-byte ints
@@ -251,22 +253,27 @@ def minhash_signature_array(
     (transform + array_min over the shingle array) keeps the streaming
     plan a pure projection. Batch keeps the explode form, whose partial
     aggregation is friendlier when one doc is huge.
+
+    The shingle array is linear in document length (:func:`_shingle_array`)
+    and built once per row: the K ``array_min(transform(sh, …))``, one per
+    hash function, read it through ``textstats.bind``.
     """
-    sh = _shingle_array(text_col, k)
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    sh,
-                    lambda s: F.pmod(
-                        F.lit(a) * F.pmod(s, F.lit(MH_H_MOD)) + F.lit(b),
-                        F.lit(MH_P),
-                    ),
+    def sign(sh):
+        return F.array(
+            *[
+                F.array_min(
+                    F.transform(
+                        sh,
+                        lambda s: F.pmod(
+                            F.lit(a) * F.pmod(s, F.lit(MH_H_MOD)) + F.lit(b),
+                            F.lit(MH_P),
+                        ),
+                    )
                 )
-            )
-            for (a, b) in mh_consts(num_hashes)
-        ]
-    )
+                for (a, b) in mh_consts(num_hashes)
+            ]
+        )
+    return bind(_shingle_array(text_col, k), sign)
 
 
 def cap_buckets(
@@ -742,12 +749,17 @@ def connected_components(
 
 
 def simhash(docs: DataFrame, text_col: str = "text", bits: int = 60) -> DataFrame:
-    """Per-document simhash: majority vote of token-hash bits.
+    """Per-document simhash: majority vote of token-hash bits, one
+    signature per input row — (doc_id, simhash long).
 
-    explode(token × bit) → groupBy(doc, bit) is deliberately avoided; the
-    vote is computed as a sum over tokens of per-bit signs with the bit loop
-    unrolled into ``bits`` aggregate expressions — one shuffle of ``bits``
-    longs per doc, all JVM-side.
+    Tokens and their ``hash60`` stay JVM-side as one ``array<long>`` per
+    row (``transform(array_distinct(split(norm_text)), hash60)``, the
+    expression the DuckDB oracle mirrors); the vote is one scalar Arrow
+    UDF over that array (``functions.sketch.simhash_vote``): bit ``b`` is
+    set iff ``2·ones_b > n`` over the row's ``n`` distinct tokens. No
+    shuffle and no aggregate, so the plan costs the same to build for
+    any ``bits``. A row is signed on its own: a ``doc_id`` that appears
+    on two input rows gets two signatures, not one merged vote.
 
     Default widened 32 → 60 in round 4 (the full hash60 width): wider
     signatures give :func:`simhash_near_pairs` 15-bit chunks instead of
@@ -758,36 +770,27 @@ def simhash(docs: DataFrame, text_col: str = "text", bits: int = 60) -> DataFram
     """
     if not 1 <= bits <= 60:
         raise ValueError("bits must be in [1, 60] (hash60 yields 60 bits)")
-    toks = docs.select(
-        "doc_id",
-        # coalesce: a NULL text must still yield a signature row (explode
-        # of a null array emits nothing and the doc would vanish from
-        # near-dup entirely) — NULL signs like the empty document, the
-        # same totality exact_dedup and shingles give it
-        F.explode(
-            F.array_distinct(
-                F.split(F.coalesce(norm_text(F.col(text_col)), F.lit("")),
-                        " "))
-        ).alias("tok"),
-    ).withColumn("h", hash60(F.col("tok")))
-    votes = toks.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1,
-                       F.lit(1)).otherwise(F.lit(-1))
-            ).alias(f"v_{b}")
-            for b in range(bits)
-        ]
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
+
+    from docling_spark.functions.sketch import simhash_vote
+
+    def _vote(hashes):
+        return simhash_vote(hashes, bits)
+
+    # real (non-string) hints: `from __future__ import annotations` would
+    # otherwise stringify them and break arrow_udf's type inference
+    _vote.__annotations__ = {"hashes": pa.Array, "return": pa.Array}
+    # coalesce: a NULL text must still yield a signature (NULL signs like
+    # the empty document, the same totality exact_dedup and shingles
+    # give it)
+    hashes = F.transform(
+        F.array_distinct(
+            F.split(F.coalesce(norm_text(F.col(text_col)), F.lit("")), " ")),
+        hash60,
     )
-    sim = votes.select(
-        "doc_id",
-        sum(
-            (F.when(F.col(f"v_{b}") > 0, F.lit(1)).otherwise(F.lit(0))
-             * F.lit(2 ** b)).cast("long")
-            for b in range(bits)
-        ).alias("simhash"),
-    )
-    return sim
+    return docs.select(
+        "doc_id", arrow_udf(_vote, "long")(hashes).alias("simhash"))
 
 
 def _simhash_banded(sim: DataFrame, bits: int, chunks: int) -> DataFrame:

@@ -719,15 +719,16 @@ def quantize_embeddings(
     embedding column becomes 25 TB plus one float per vector).
 
     All JVM Column expressions (aggregate for max|v|, transform for the
-    rounding) — whole-stage codegen, no Python, no shuffle. Zero
+    rounding) — whole-stage codegen, no Python, no shuffle. max|v| is
+    bound in a select of its own, once per vector: inside the rounding
+    lambda it would be re-aggregated for every element, O(dim²). Zero
     vectors keep scale 0 and all-zero codes (dequantize restores the
     zero vector exactly).
 
     Output: (id, scale double, qvec array<int> in [-127, 127]).
     """
     v = F.col(vec_col).cast("array<double>")
-    amax = F.aggregate(v, F.lit(0.0),
-                       lambda acc, x: F.greatest(acc, F.abs(x)))
+    amax = F.col("_amax")
     scale = F.when(amax > 0, amax / F.lit(127.0)).otherwise(F.lit(0.0))
     q = F.when(
         amax > 0,
@@ -735,6 +736,10 @@ def quantize_embeddings(
                     .cast("int")),
     ).otherwise(F.transform(v, lambda x: F.lit(0)))
     return emb.select(
+        F.col(id_col), F.col(vec_col),
+        F.aggregate(v, F.lit(0.0), lambda acc, x: F.greatest(acc, F.abs(x)))
+        .alias("_amax"),
+    ).select(
         F.col(id_col),
         F.round(scale, 9).alias("scale"),
         q.alias("qvec"),

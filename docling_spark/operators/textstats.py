@@ -40,6 +40,39 @@ def tokens(col) -> Column:
     return F.filter(F.split(col, r"\s+"), lambda t: t != "")
 
 
+def bind(value, body) -> Column:
+    """``body(v)`` for an array-valued ``body``, where ``v`` is ``value``
+    evaluated once per row.
+
+    Spark does no common-subexpression elimination inside or beneath an
+    interpreted higher-order function, so an expression that ``body``
+    reads m times would be evaluated m times. Here ``body`` reads a
+    lambda variable bound to the one element of ``array(value)``, and
+    ``flatten`` unwraps the one result, keeping ``body``'s type and
+    nullability."""
+    return F.flatten(F.transform(F.array(value), body))
+
+
+def kgrams(toks, k: int) -> Column:
+    """Every run of ``k`` consecutive tokens of the ``array<string>``
+    ``toks``, space-joined, in document order: ``size(toks) - k + 1``
+    grams, none when ``toks`` is shorter than ``k``, NULL for a NULL
+    array.
+
+    Built from ``arrays_zip`` of ``k`` shifted slices, so the lambda joins
+    the fields of its own struct and never reads ``toks``. A per-gram
+    ``slice(toks, i, k)`` would re-evaluate ``toks`` — when it is an
+    expression such as ``split(norm_text(text))``, the whole document's
+    tokenization — once per gram: O(n²) in document length. ``toks`` is
+    :func:`bind`-ed, so the ``k`` slices and their length read it once."""
+    def grams(t):
+        n = F.greatest(F.size(t) - k + 1, F.lit(0))
+        zipped = F.arrays_zip(*[F.slice(t, j + 1, n) for j in range(k)])
+        return F.transform(
+            zipped, lambda g: F.concat_ws(" ", *[g[str(j)] for j in range(k)]))
+    return bind(toks, grams)
+
+
 def token_count(col) -> Column:
     return F.when(F.trim(col) == "", F.lit(0)).otherwise(F.size(tokens(col)))
 

@@ -86,13 +86,18 @@ def alpha_word_frac(col) -> Column:
 def required_stopword_hits(col) -> Column:
     """How many of Gopher's 8 required English stopwords appear as
     whole lowercase words. Counts DISTINCT stopwords present (the
-    paper's 'contains at least 2 of the following'), not occurrences."""
-    ltoks = tokens(F.lower(col))
-    present = F.filter(
+    paper's 'contains at least 2 of the following'), not occurrences.
+    NULL text has none: 0.
+
+    One ``array_intersect`` over the document's tokens, tokenized once
+    (a per-stopword ``array_contains`` lambda re-tokenized the document
+    for every stopword)."""
+    present = F.array_intersect(
         F.array(*[F.lit(w) for w in GOPHER_REQUIRED_STOPWORDS]),
-        lambda w: F.array_contains(ltoks, w),
+        tokens(F.lower(col)),
     )
-    return F.size(present)
+    # size(NULL) is NULL (or -1 with ANSI off), not 0
+    return F.size(F.coalesce(present, F.array().cast("array<string>")))
 
 
 def gopher_quality(docs: DataFrame, text_col: str = "text",
