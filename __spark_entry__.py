@@ -56,6 +56,10 @@ def _fan_out(df: DataFrame) -> DataFrame:
     full parallelism; a production-scale table already carries at least
     cluster-parallelism splits, and the check skips the shuffle there.
     Row contents are untouched, so every oracle stays bit-identical.
+
+    Give it a plain scan: under AQE, ``getNumPartitions`` on a frame
+    with an exchange upstream runs that exchange one extra time, and a
+    frame built from ``_docs``/``_emb`` is fanned out already.
     """
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:
@@ -323,7 +327,7 @@ def q_extract_status_counts(spark, sf_dir):
         payload.alias("text"), tool.alias("tool"),
     )
     return (
-        extract_turns(_fan_out(d)).groupBy("status")
+        extract_turns(d).groupBy("status")
         .agg(F.count("*").alias("n"))
     )
 
@@ -357,7 +361,7 @@ def q_extract_format_policy(spark, sf_dir):
         payload.alias("text"),
         F.when(is_html, F.lit("html")).otherwise(F.lit("md")).alias("tool"),
     )
-    out = extract_turns(_fan_out(d), allowed_formats=("html",))
+    out = extract_turns(d, allowed_formats=("html",))
     return out.select(
         F.col("conv_id").cast("long").alias("doc_id"),
         "status",
@@ -1696,7 +1700,7 @@ def q_extract_items_spans(spark, sf_dir):
         _pdfish_two_col_payload().alias("text"),
         F.lit("pdfish").alias("tool"),
     )
-    out = extract_turns(_fan_out(d))
+    out = extract_turns(d)
     return out.select(
         F.col("conv_id").cast("long").alias("doc_id"),
         F.explode("items").alias("it"),
@@ -3393,7 +3397,7 @@ def q_heading_hierarchy(spark, sf_dir):
         payload.alias("text"), F.lit("html").alias("tool"),
     )
     return (
-        extract_turns(_fan_out(d))
+        extract_turns(d)
         .select(F.col("conv_id").cast("long").alias("doc_id"),
                 F.explode("items").alias("it"))
         .select(
@@ -3450,7 +3454,7 @@ def q_chunk_budget(spark, sf_dir):
         payload.alias("text"), F.lit("html").alias("tool"),
     )
     items = (
-        extract_turns(_fan_out(d))
+        extract_turns(d)
         .select(F.col("conv_id").cast("long").alias("doc_id"),
                 F.explode("items").alias("it"))
         .select("doc_id", F.col("it.item_idx").alias("item_idx"),
@@ -4267,7 +4271,7 @@ def q_export_docling_json(spark, sf_dir):
             yield pd.DataFrame({"doc_id": ids, "roundtrip_text": texts})
 
     return (
-        extract_turns(_fan_out(d)).select("conv_id", "items")
+        extract_turns(d).select("conv_id", "items")
         .mapInPandas(run, "doc_id long, roundtrip_text string")
     )
 
@@ -4847,7 +4851,7 @@ def q_export_html(spark, sf_dir):
             yield pd.DataFrame({"doc_id": ids, "roundtrip_text": texts})
 
     return (
-        extract_turns(_fan_out(d)).select("conv_id", "items")
+        extract_turns(d).select("conv_id", "items")
         .mapInPandas(run, "doc_id long, roundtrip_text string")
     )
 
@@ -5106,7 +5110,7 @@ def q_export_doctags(spark, sf_dir):
         F.lit(None).cast("timestamp").alias("ts"),
         payload.alias("text"), F.lit("html").alias("tool"),
     )
-    out = export_items(extract_turns(_fan_out(d)), "doctags")
+    out = export_items(extract_turns(d), "doctags")
     return out.select(
         F.col("conv_id").cast("long").alias("doc_id"), "doctags"
     )
@@ -5213,7 +5217,7 @@ def q_confidence_report(spark, sf_dir):
         F.lit(None).cast("timestamp").alias("ts"),
         payload.alias("text"), F.lit("pdfish").alias("tool"),
     )
-    out = extract_turns(_fan_out(d))
+    out = extract_turns(d)
     score = F.round(F.col("metrics.parse_score"), 6)
     return out.select(
         F.col("conv_id").cast("long").alias("doc_id"),
@@ -5263,7 +5267,7 @@ def q_extract_metrics_by_format(spark, sf_dir):
         F.lit(None).cast("timestamp").alias("ts"),
         payload.alias("text"), tool.alias("tool"),
     )
-    out = extract_turns(_fan_out(d))
+    out = extract_turns(d)
     return out.groupBy("format").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.sum(F.col("metrics.n_items")).cast("long").alias("total_items"),
@@ -5440,7 +5444,7 @@ def q_extract_image(spark, sf_dir):
     )
     # dims re-derived narrow (payload is a pure function of doc_id):
     # no join, no shuffle — the whole query is one map pipeline
-    out = extract_turns(_fan_out(tr)).withColumn(
+    out = extract_turns(tr).withColumn(
         "dims", dims_of(gif_b64(F.col("conv_id").cast("long")))
     )
     return out.select(
@@ -7053,7 +7057,7 @@ def q_export_yaml(spark, sf_dir):
             yield pd.DataFrame({"doc_id": ids, "roundtrip_text": texts})
 
     return (
-        extract_turns(_fan_out(d)).select("conv_id", "items")
+        extract_turns(d).select("conv_id", "items")
         .mapInPandas(run, "doc_id long, roundtrip_text string")
     )
 

@@ -12,9 +12,9 @@ the 10^12-turn / 1000-executor regime:
   turn_idx)`` before the write: each bucket gets one writer, and every
   file is sorted by ``(conv_id, turn_idx)``.
 - **Skew/salting**: extraction itself is per-row, so long conversations are
-  spread with ``repartition(salt)`` where ``salt = xxhash64(conv_id,
-  turn_idx) % parallelism`` — no conversation-level hotspot no matter how
-  skewed turn counts are (SURVEY.md §7.4.5: salting must not affect
+  spread with ``repartition`` on ``(conv_id, turn_idx)`` over the
+  session's default parallelism — no conversation-level hotspot no matter
+  how skewed turn counts are (SURVEY.md §7.4.5: salting must not affect
   correctness, and cannot, because extraction is conversation-agnostic).
   On the write side a bucket is the unit, and every row of one
   conversation shares it; AQE's rebalance splits an oversized bucket (a
@@ -28,14 +28,14 @@ the 10^12-turn / 1000-executor regime:
   remainder (ConversionAssets save/load analog,
   docling/datamodel/document.py:431-584). Bucket writes are idempotent
   (dynamic partition overwrite).
-- **Run counters**: status counts and the set of buckets written come
-  from one ``Observation`` on the write itself, so no pass over the input
-  or the output is spent on bookkeeping.
-- **Metrics sidecar**: per-partition counters aggregated with one narrow
-  groupBy over ``spark_partition_id()`` of a read-back scoped to this
-  run's buckets, one row per read split (FIXTURES.md §4; the reference's
-  ProfilingItem/ConfidenceReport analog). It is the only read-back, and
-  runs only when ``metrics_path`` is set.
+- **Run counters**: one list of counter expressions (``_counters``) is
+  observed on the write itself, with the set of buckets written, so no
+  pass over the input or the output is spent on bookkeeping.
+- **Metrics sidecar**: with ``metrics_path`` set, each run that wrote rows
+  appends ONE row (``SIDECAR_SCHEMA``, FIXTURES.md §4; the reference's
+  ``ConversionResult.timings``/``confidence`` analog) built from that
+  observation — nothing is read back. ``sidecar_metrics`` is the same
+  counter list as an aggregate over any extracted frame.
 """
 
 from __future__ import annotations
@@ -49,10 +49,13 @@ from pyspark.sql import types as T
 from docling_spark.engine.extract import (STATUS_FAILURE, STATUS_PARTIAL,
                                           STATUS_SKIPPED, STATUS_SUCCESS)
 from docling_spark.operators.extract_ops import extract_turns
-from docling_spark.schema import EXTRACTED_SCHEMA
+from docling_spark.schema import EXTRACTED_SCHEMA, SIDECAR_SCHEMA
 
 DEFAULT_BUCKETS = 64
-STATUSES = (STATUS_SUCCESS, STATUS_PARTIAL, STATUS_FAILURE, STATUS_SKIPPED)
+# each status's counter column in the sidecar; run_extract's ``counts``
+# keeps the status names
+STATUS_COUNTERS = {STATUS_SUCCESS: "n_success", STATUS_PARTIAL: "n_partial",
+                   STATUS_FAILURE: "n_failure", STATUS_SKIPPED: "n_skipped"}
 
 # output schema incl. the physical partition column (explicit schema on
 # read-back: no inference listing, and empty outputs stay readable)
@@ -64,6 +67,20 @@ OUTPUT_SCHEMA = T.StructType(
 
 def bucket_col(n_buckets: int = DEFAULT_BUCKETS):
     return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
+
+
+def _counters() -> list:
+    """The run's counters over extracted rows, named as in
+    ``SIDECAR_SCHEMA``: observed on the write by ``run_extract`` and
+    aggregated by ``sidecar_metrics``, so they are defined once."""
+    return [
+        F.count("*").alias("n_turns"),
+        *(F.count_if(F.col("status") == s).alias(name)
+          for s, name in STATUS_COUNTERS.items()),
+        F.coalesce(F.sum("metrics.pages_parsed"), F.lit(0))
+        .alias("pages_parsed"),
+        F.avg("metrics.boilerplate_ratio").alias("boilerplate_ratio"),
+    ]
 
 
 def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
@@ -91,31 +108,12 @@ def salt_skew(df: DataFrame, parallelism: int) -> DataFrame:
 
 def sidecar_metrics(extracted: DataFrame, run_id: str,
                     wall_ms: int = 0) -> DataFrame:
-    """Per-physical-partition lineage counters (one narrow agg, no extra
-    pass over payloads). ``partition_id`` reflects the partitions of the
-    frame HANDED IN — pass the pre-write frame for extraction-stage
-    lineage, or the read-back frame for file-split lineage (what
-    run_extract records: one row per output split)."""
-    return (
-        extracted.select(
-            F.spark_partition_id().alias("partition_id"),
-            "status",
-            F.col("metrics.pages_parsed").alias("pages_parsed"),
-            F.col("metrics.boilerplate_ratio").alias("boilerplate_ratio"),
-        )
-        .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.sum((F.col("status") == "success").cast("long")).alias("n_success"),
-            F.sum((F.col("status") == "partial_success").cast("long")).alias("n_partial"),
-            F.sum((F.col("status") == "failure").cast("long")).alias("n_failure"),
-            F.sum((F.col("status") == "skipped").cast("long")).alias("n_skipped"),
-            F.sum(F.coalesce(F.col("pages_parsed"), F.lit(0)).cast("long")).alias("pages_parsed"),
-            F.avg("boilerplate_ratio").alias("boilerplate_ratio"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("wall_ms", F.lit(int(wall_ms)).cast("long"))
-    )
+    """One ``SIDECAR_SCHEMA`` row: the run counters aggregated over
+    ``extracted``, the row ``run_extract`` builds from its write's
+    observation."""
+    return extracted.agg(*_counters()).select(
+        F.lit(run_id).alias("run_id"), "*",
+        F.lit(int(wall_ms)).cast("long").alias("wall_ms"))
 
 
 def run_extract(
@@ -124,7 +122,6 @@ def run_extract(
     output_path: str,
     run_id: str = "run0",
     n_buckets: int = DEFAULT_BUCKETS,
-    parallelism: int | None = None,
     state_path: str | None = None,
     metrics_path: str | None = None,
     pdf_passwords: tuple[str, ...] = (),
@@ -137,50 +134,41 @@ def run_extract(
     exactly-once resume protocol (bucket-level idempotent overwrite).
     """
     t0 = time.time()
-    if parallelism is None:
-        parallelism = spark.sparkContext.defaultParallelism
-
     df = transcripts.withColumn("conv_bucket", bucket_col(n_buckets))
 
     done_buckets: set[int] = set()
-    if state_path:
-        # ONLY the first-run case (no state written yet) may proceed
-        # fresh; any other read failure (corrupt files, transient FS
-        # error) silently resetting done_buckets would reprocess every
-        # bucket and double-append sidecar metrics — real state loss
-        # masked as a clean start. First run is detected by an explicit
-        # Hadoop FileSystem existence probe, never by matching exception
-        # message text (which varies across Spark versions/connectors
-        # and would turn a legitimate first run into a crash)
-        if not _hadoop_path_exists(spark, state_path):
-            state = None
-        else:
-            state = spark.read.parquet(state_path)
-        if state is not None:
-            # bucket ids are only meaningful under the n_buckets that
-            # computed them — resuming with a different modulus would
-            # skip DIFFERENT conversation sets than the ones completed
-            if "n_buckets" in state.columns:
-                prior = [
-                    r["n_buckets"] for r in
-                    state.select("n_buckets").distinct().collect()
-                    if r["n_buckets"] is not None
-                ]
-                if prior and set(prior) != {n_buckets}:
-                    raise ValueError(
-                        f"state at {state_path} was written with "
-                        f"n_buckets={sorted(set(prior))}, this run uses "
-                        f"{n_buckets}; rerun with the original bucket "
-                        f"count or start a fresh state table")
-            done_buckets = {
-                r["conv_bucket"]
-                for r in state.filter(F.col("status") == "done")
-                .select("conv_bucket").distinct().collect()
-            }
+    # ONLY the first-run case (no state written yet) may proceed fresh;
+    # any other read failure (corrupt files, transient FS error) silently
+    # resetting done_buckets would reprocess every bucket and
+    # double-append sidecar metrics — real state loss masked as a clean
+    # start. First run is detected by an explicit Hadoop FileSystem
+    # existence probe, never by matching exception message text (which
+    # varies across Spark versions/connectors and would turn a
+    # legitimate first run into a crash)
+    if state_path and _hadoop_path_exists(spark, state_path):
+        state = spark.read.parquet(state_path)
+        # bucket ids are only meaningful under the n_buckets that
+        # computed them — resuming with a different modulus would skip
+        # DIFFERENT conversation sets than the ones completed. A legacy
+        # state table has no n_buckets column and is taken at this
+        # run's count
+        prior, done = state.agg(
+            F.collect_set(F.col("n_buckets") if "n_buckets" in state.columns
+                          else F.lit(n_buckets)),
+            F.collect_set(F.when(F.col("status") == "done",
+                                 F.col("conv_bucket"))),
+        ).first()
+        if prior and set(prior) != {n_buckets}:
+            raise ValueError(
+                f"state at {state_path} was written with "
+                f"n_buckets={sorted(prior)}, this run uses "
+                f"{n_buckets}; rerun with the original bucket "
+                f"count or start a fresh state table")
+        done_buckets = set(done)
         if done_buckets:
             df = df.filter(~F.col("conv_bucket").isin(sorted(done_buckets)))
 
-    df = salt_skew(df, parallelism)
+    df = salt_skew(df, spark.sparkContext.defaultParallelism)
     extracted = extract_turns(df.drop("conv_bucket"),
                               pdf_passwords=pdf_passwords,
                               allowed_formats=allowed_formats)
@@ -199,9 +187,7 @@ def run_extract(
         # and survives into the files: each one is sorted by
         # (conv_id, turn_idx)
         .hint("rebalance", "conv_bucket")
-        .observe(obs,
-                 *(F.count_if(F.col("status") == s).alias(s)
-                   for s in STATUSES),
+        .observe(obs, *_counters(),
                  F.collect_set("conv_bucket").alias("buckets"))
         .sortWithinPartitions("conv_bucket", "conv_id", "turn_idx")
         .write.mode("overwrite")
@@ -213,7 +199,8 @@ def run_extract(
         .parquet(output_path)
     )
     observed = obs.get
-    counts = {s: observed[s] for s in STATUSES if observed[s]}
+    counts = {s: observed[name] for s, name in STATUS_COUNTERS.items()
+              if observed[name]}
     # the buckets THIS run wrote: state and sidecar are scoped to exactly
     # these, because dynamic partition overwrite PRESERVES partitions
     # this run didn't touch
@@ -239,17 +226,18 @@ def run_extract(
             F.current_timestamp().alias("ts"),
         ).write.mode("append").parquet(state_path)
 
-    if metrics_path:
-        # the one read-back left, scoped to this run's buckets
-        out = spark.read.schema(OUTPUT_SCHEMA).parquet(output_path)
-        out = out.filter(F.col("conv_bucket").isin(processed_buckets)
-                         if processed_buckets else F.lit(False))
-        sidecar_metrics(out, run_id,
-                        wall_ms=int((time.time() - t0) * 1000)) \
-            .write.mode("append").parquet(metrics_path)
+    if metrics_path and processed_buckets:
+        # one row per run, from the observation: JVM literals, like the
+        # state rows
+        row = dict(observed, run_id=run_id,
+                   wall_ms=int((time.time() - t0) * 1000))
+        spark.range(1).select(*(
+            F.lit(row[f.name]).cast(f.dataType).alias(f.name)
+            for f in SIDECAR_SCHEMA.fields
+        )).write.mode("append").parquet(metrics_path)
 
     wall = time.time() - t0
-    total = sum(counts.values())
+    total = observed["n_turns"]
     return {
         "counts": counts,
         "total": total,

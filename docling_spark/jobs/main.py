@@ -16,6 +16,13 @@ import argparse
 import json
 import sys
 
+from docling_spark.jobs.convert import ITEM_FORMATS, check_formats
+
+
+def _split(formats: str | None) -> tuple[str, ...] | None:
+    return (tuple(f.strip() for f in formats.split(",") if f.strip())
+            if formats else None)
+
 
 def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p = argparse.ArgumentParser(description="docling-spark extraction job")
@@ -25,7 +32,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--metrics-table", default=None)
     p.add_argument("--buckets", type=int, default=64)
     p.add_argument("--run-id", default="run0")
-    p.add_argument("--parallelism", type=int, default=None)
     p.add_argument("--synthetic-convs", type=int, default=None,
                    help="generate a synthetic corpus instead of reading input")
     p.add_argument("--streaming", action="store_true",
@@ -52,6 +58,14 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
             p.error("--streaming requires --input-table")
     elif not args.input_table and not args.synthetic_convs:
         p.error("one of --input-table / --synthetic-convs is required")
+    # validated before any Spark work: a typo'd --to would otherwise fail
+    # only after the whole extraction and write, and a typo'd --from
+    # silently SKIP every turn
+    args.from_formats, args.to = _split(args.from_formats), _split(args.to)
+    try:
+        check_formats(args.to or (), args.from_formats, ITEM_FORMATS)
+    except ValueError as exc:
+        p.error(str(exc))
     return args
 
 
@@ -78,9 +92,7 @@ def main(argv: list[str] | None = None) -> int:
         q = run_stream(spark, args.input_table, args.output_table,
                        args.checkpoint or args.output_table + "_ckpt",
                        pdf_passwords=tuple(args.password),
-                       allowed_formats=(tuple(
-                           f.strip() for f in args.from_formats.split(",")
-                           if f.strip()) if args.from_formats else None))
+                       allowed_formats=args.from_formats)
         q.awaitTermination()
         print(json.dumps({"status": "stream_done"}))
         return 0
@@ -97,30 +109,19 @@ def main(argv: list[str] | None = None) -> int:
     summary = run_extract(
         spark, transcripts, args.output_table,
         run_id=args.run_id, n_buckets=args.buckets,
-        parallelism=args.parallelism,
         state_path=args.state_table, metrics_path=args.metrics_table,
         pdf_passwords=tuple(args.password),
-        allowed_formats=(tuple(f.strip() for f in
-                               args.from_formats.split(",") if f.strip())
-                         if args.from_formats else None),
+        allowed_formats=args.from_formats,
     )
     if args.to:
         from docling_spark.jobs.extract_job import OUTPUT_SCHEMA
-        from docling_spark.operators.export import _SERIALIZERS, export_items
+        from docling_spark.operators.export import export_items
 
         # explicit schema: an empty output (fully-resumed rerun, empty
         # input) has no data files to infer from and would fail the job
         # AFTER extraction succeeded
         extracted = spark.read.schema(OUTPUT_SCHEMA).parquet(args.output_table)
-        fmts = [f.strip() for f in args.to.split(",") if f.strip()]
-        # validate the WHOLE list before any export runs: a typo in a
-        # later format must not abort after earlier full-table export
-        # passes already wrote their outputs
-        unknown = [f for f in fmts if f not in _SERIALIZERS]
-        if unknown:
-            raise SystemExit(f"unknown export format(s): {unknown} "
-                             f"(known: {sorted(_SERIALIZERS)})")
-        for fmt in fmts:
+        for fmt in args.to:
             export_items(extracted, fmt=fmt).write.mode("overwrite") \
                 .parquet(f"{args.output_table}_export_{fmt}")
             summary[f"export_{fmt}"] = f"{args.output_table}_export_{fmt}"

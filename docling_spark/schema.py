@@ -77,11 +77,10 @@ EXTRACTED_SCHEMA = T.StructType(
     ]
 )
 
-# sidecar lineage/metrics table (FIXTURES.md §4)
+# sidecar metrics table, one row per run that wrote rows (FIXTURES.md §4)
 SIDECAR_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
         T.StructField("n_turns", T.LongType(), False),
         T.StructField("n_success", T.LongType(), False),
         T.StructField("n_partial", T.LongType(), False),

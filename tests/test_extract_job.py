@@ -289,3 +289,58 @@ def test_counters_match_written_rows(spark, transcripts, tmp_path):
     assert st.schema.simpleString() == (
         "struct<run_id:string,conv_bucket:int,status:string,"
         "n_buckets:int,ts:timestamp>")
+
+
+def test_sidecar_is_the_writes_observation(spark, tmp_path, monkeypatch):
+    """The sidecar row comes from the write's observation: run_extract
+    never reads its output back, and the one row per run equals
+    sidecar_metrics over the written table. A fully resumed rerun
+    appends none."""
+    from pyspark.sql import DataFrameReader
+
+    from docling_spark.jobs.extract_job import sidecar_metrics
+    from docling_spark.schema import SIDECAR_SCHEMA
+
+    out = str(tmp_path / "out")
+    state = str(tmp_path / "state")
+    metrics = str(tmp_path / "metrics")
+    tr = transcripts_df(spark, 12, partitions=2, long_every=0)
+    reads: list = []
+    parquet = DataFrameReader.parquet
+
+    def recording(self, *paths, **options):
+        reads.extend(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording)
+    for run in ("r1", "r2"):
+        run_extract(spark, tr, out, run_id=run, n_buckets=8,
+                    state_path=state, metrics_path=metrics)
+    monkeypatch.undo()
+    assert out not in reads
+
+    m = spark.read.parquet(metrics)
+    assert m.columns == SIDECAR_SCHEMA.fieldNames()
+    assert [f.dataType for f in m.schema] == \
+        [f.dataType for f in SIDECAR_SCHEMA]
+    rows = m.collect()
+    assert [r["run_id"] for r in rows] == ["r1"]
+    assert rows[0]["wall_ms"] > 0
+    got = rows[0].asDict()
+    want = sidecar_metrics(spark.read.parquet(out), "r1").first().asDict()
+    for d in (got, want):
+        del d["run_id"], d["wall_ms"]
+    assert got.pop("boilerplate_ratio") == \
+        pytest.approx(want.pop("boilerplate_ratio"))
+    assert got == want
+    assert got["n_turns"] == tr.count()
+
+
+def test_run_extract_leaves_no_cached_blocks(spark, tmp_path):
+    sc = spark.sparkContext
+    tr = transcripts_df(spark, 12, partitions=2, long_every=0)
+    before = sc._jsc.getPersistentRDDs().size()
+    run_extract(spark, tr, str(tmp_path / "out"), run_id="r1", n_buckets=8,
+                state_path=str(tmp_path / "state"),
+                metrics_path=str(tmp_path / "metrics"))
+    assert sc._jsc.getPersistentRDDs().size() == before

@@ -86,7 +86,7 @@ def test_spark_submit_py_files_job(tmp_path) -> None:
     ).fetchone()[0]
     n_turns = sum(summary["counts"].values())
     assert n_rows == n_turns > 0
-    # lineage sidecar: per-partition counters present and consistent
+    # metrics sidecar: the one row this run appended counts every turn
     m = con.execute(
         "select sum(n_turns) from "
         f"read_parquet('{tmp_path / 'metrics'}/**/*.parquet')"

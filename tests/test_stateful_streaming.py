@@ -6,11 +6,9 @@ from __future__ import annotations
 
 import time
 
-import pytest
 from pyspark.sql import functions as F
 
 
-@pytest.mark.timeout(600)
 def test_stateful_assembly_matches_batch(spark, tmp_path):
     from docling_spark.operators.extract_ops import (
         assemble_conversations,
@@ -73,7 +71,6 @@ def test_stateful_assembly_matches_batch(spark, tmp_path):
         assert got[conv_id][0] == text, conv_id
 
 
-@pytest.mark.timeout(600)
 def test_assembler_skips_null_text():
     """Null extracted_text must be skipped (the batch twin's array_join
     drops null elements) — not stringified into the literal 'None'."""
@@ -149,7 +146,10 @@ def test_stream_dedup_keeps_first_across_microbatches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    try:
+        assert q.awaitTermination(300)
+    finally:
+        q.stop()
 
     got = {r["fingerprint"]: r["doc_id"]
            for r in spark.read.parquet(out).collect()}
@@ -214,7 +214,10 @@ def test_stream_near_dedup_across_microbatches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    try:
+        assert q.awaitTermination(300)
+    finally:
+        q.stop()
 
     got = spark.read.parquet(out).collect()
     assert got, "near-pair across micro-batches not detected"

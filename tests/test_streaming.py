@@ -4,14 +4,12 @@ checkpointed exactly-once progress (SURVEY.md §2.i)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from docling_spark.sources.transcripts import transcripts_df
 from docling_spark.streaming.stream_extract import run_stream
 
 
-@pytest.mark.timeout(600)
 def test_stream_matches_batch(spark, tmp_path):
     inp = str(tmp_path / "in")
     out = str(tmp_path / "out")
@@ -22,7 +20,10 @@ def test_stream_matches_batch(spark, tmp_path):
     n_in = spark.read.parquet(inp).count()
 
     q = run_stream(spark, inp, out, ckpt, available_now=True)
-    q.awaitTermination(300)
+    try:
+        assert q.awaitTermination(300)
+    finally:
+        q.stop()
 
     got = spark.read.parquet(out)
     assert got.count() == n_in
@@ -42,11 +43,13 @@ def test_stream_matches_batch(spark, tmp_path):
 
     # restart with the same checkpoint and no new files: no duplicates
     q2 = run_stream(spark, inp, out, ckpt, available_now=True)
-    q2.awaitTermination(120)
+    try:
+        assert q2.awaitTermination(120)
+    finally:
+        q2.stop()
     assert spark.read.parquet(out).count() == n_in
 
 
-@pytest.mark.timeout(600)
 def test_stream_stream_join_within_tolerance(spark, tmp_path):
     """Watermarked stream-stream join matches the batch join and only
     pairs annotations within the event-time tolerance."""
@@ -84,7 +87,10 @@ def test_stream_stream_join_within_tolerance(spark, tmp_path):
         .option("path", out).option("checkpointLocation", ckpt)
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(300)
+    try:
+        assert q.awaitTermination(300)
+    finally:
+        q.stop()
 
     got = {(r["conv_id"], r["turn_idx"], r["label"])
            for r in spark.read.parquet(out).collect()}
@@ -97,7 +103,6 @@ def test_stream_stream_join_within_tolerance(spark, tmp_path):
     assert batch == got
 
 
-@pytest.mark.timeout(600)
 def test_stream_allowed_formats_policy(spark, tmp_path):
     """The allowed-format policy gate (document_converter.py:738-752)
     applies identically under the streaming wrapper: disallowed formats
@@ -114,7 +119,10 @@ def test_stream_allowed_formats_policy(spark, tmp_path):
 
     q = run_stream(spark, inp, out, ckpt, available_now=True,
                    allowed_formats=("html", "csv"))
-    q.awaitTermination(300)
+    try:
+        assert q.awaitTermination(300)
+    finally:
+        q.stop()
 
     got = {r["turn_idx"]: r for r in spark.read.parquet(out).collect()}
     assert got[0]["status"] == "success"
@@ -156,7 +164,10 @@ def test_chunk_assembled_stream_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    try:
+        assert q.awaitTermination(300)
+    finally:
+        q.stop()
     streamed = spark.read.parquet(out).collect()
 
     key = lambda r: (r.conv_id, r.chunk_idx)  # noqa: E731
