@@ -1,0 +1,4 @@
+from docling_spark import _worker
+
+if _worker.on_worker():
+    _worker.install()

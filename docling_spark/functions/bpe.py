@@ -9,8 +9,9 @@ counts tokens with a downloaded HF tokenizer, so its chunk boundaries
 depend on the exact BPE/WordPiece segmentation. Earlier rounds stood in
 a whitespace tokenizer (documented divergence); this module closes the
 gap: a user who supplies the same ``tokenizer.json`` file the reference
-downloads gets identical token counts — and therefore identical chunk
-boundaries — from :func:`docling_spark.operators.chunker.hybrid_chunks`.
+downloads gets the same token counts — and therefore the same chunk
+boundaries — from :func:`docling_spark.operators.chunker.hybrid_chunks`,
+within the subset below.
 
 Supported model types (``model.type``):
 
@@ -24,7 +25,16 @@ Supported model types (``model.type``):
   ``continuing_subword_prefix`` (``##``), the BertNormalizer
   (lowercase / NFD strip-accents as configured) and the Bert
   pretokenizer (whitespace split + punctuation isolation, including
-  BERT's ASCII-symbol ranges).
+  BERT's ASCII-symbol ranges). Gap: the BertNormalizer's CJK isolation
+  (``handle_chinese_chars``, a space around every CJK ideograph) and its
+  control-character cleaning are not implemented, so counts differ from
+  the HF library on text that has either.
+
+Configs outside the subset raise ``ValueError`` naming the type: a
+WordPiece ``normalizer`` must be ``BertNormalizer``, ``Lowercase`` or
+``StripAccents`` (alone or in a ``Sequence``) and its ``pre_tokenizer``
+``BertPreTokenizer``; a BPE spec has no ``normalizer`` and a
+``ByteLevel`` ``pre_tokenizer``. Either field may be absent.
 
 ``added_tokens`` (specials like ``[CLS]`` or ``<|endoftext|>``) split
 the input first, longest-first, and count as one token each. Counting
@@ -270,6 +280,31 @@ class _WordPieceModel:
 # public facade
 # ---------------------------------------------------------------------------
 
+# model type -> (normalizer types, pre_tokenizer types) this module implements
+_SUPPORTED = {
+    "BPE": (frozenset(), frozenset({"ByteLevel"})),
+    "WordPiece": (frozenset({"BertNormalizer", "Lowercase", "StripAccents"}),
+                  frozenset({"BertPreTokenizer"})),
+}
+
+
+def _components(spec: dict, field: str, accepted: frozenset,
+                mtype: str) -> list:
+    """The configs of ``spec[field]`` (a normalizer ``Sequence`` lists
+    its members); raise on a type this module does not implement."""
+    cfg = spec.get(field)
+    if not cfg:
+        return []
+    items = (cfg.get("normalizers") or []
+             if field == "normalizer" and cfg.get("type") == "Sequence"
+             else [cfg])
+    for item in items:
+        t = (item or {}).get("type")
+        if t not in accepted:
+            raise ValueError(f"unsupported {mtype} {field} type: {t}")
+    return items
+
+
 class Tokenizer:
     """Encoder over a parsed ``tokenizer.json`` spec (dict). Picklable;
     safe to ship via Spark broadcast and reuse across Arrow batches."""
@@ -278,18 +313,20 @@ class Tokenizer:
         model = spec.get("model") or {}
         mtype = model.get("type") or ("BPE" if "merges" in model
                                       else "WordPiece")
+        if mtype not in _SUPPORTED:
+            raise ValueError(f"unsupported tokenizer model type: {mtype}")
+        norm_ok, pre_ok = _SUPPORTED[mtype]
+        norms = _components(spec, "normalizer", norm_ok, mtype)
+        _components(spec, "pre_tokenizer", pre_ok, mtype)
         vocab = dict(model.get("vocab") or {})
         if mtype == "BPE":
             self.model = _BPEModel(vocab, model.get("merges") or [],
                                    model.get("unk_token"))
-        elif mtype == "WordPiece":
+        else:
             lowercase = False
             strip_accents = False
-            norm = spec.get("normalizer") or {}
-            norms = (norm.get("normalizers")
-                     if norm.get("type") == "Sequence" else [norm])
-            for nm in norms or []:
-                t = (nm or {}).get("type")
+            for nm in norms:
+                t = nm.get("type")
                 if t == "BertNormalizer":
                     lowercase = bool(nm.get("lowercase", True))
                     sa = nm.get("strip_accents")
@@ -305,8 +342,6 @@ class Tokenizer:
                 max_chars=int(model.get("max_input_chars_per_word")
                               or 100),
                 lowercase=lowercase, strip_accents=strip_accents)
-        else:
-            raise ValueError(f"unsupported tokenizer model type: {mtype}")
         # specials/added tokens split the raw text first, longest-first,
         # and encode as themselves (one token each)
         self.added = {t["content"]: t["id"]

@@ -1,10 +1,29 @@
 from __future__ import annotations
 
 import os
+import pathlib
 
 import pytest
 
 os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "requires_reference(path): skip unless `path` of the reference "
+        "checkout exists")
+
+
+def pytest_collection_modifyitems(items):
+    """``requires_reference(path)`` is the one guard for tests that read
+    the reference corpus; they run wherever its checkout is present."""
+    for item in items:
+        for mark in item.iter_markers("requires_reference"):
+            if not pathlib.Path(mark.args[0]).exists():
+                item.add_marker(pytest.mark.skip(
+                    reason="reference checkout not available"))
+                break
 
 
 @pytest.fixture(scope="session")

@@ -41,9 +41,7 @@ EXPECT = {
     "silent_1s.wav": ("wav", "pcm", 1.0, 44100, 1),
 }
 
-pytestmark = pytest.mark.skipif(
-    not SRC.exists(), reason="reference checkout not available"
-)
+pytestmark = pytest.mark.requires_reference(SRC)
 
 
 @pytest.mark.parametrize("name", sorted(EXPECT))

@@ -99,6 +99,43 @@ def test_wordpiece_hand_computed(wp):
     assert wp.count("a\nb") == 2                        # \n erased
 
 
+# ------------------------------------------- unsupported configs rejected
+
+_WP = {"model": {"type": "WordPiece", "vocab": {"[UNK]": 0}}}
+_BPE = {"model": {"type": "BPE", "vocab": {"a": 0}, "merges": []}}
+
+
+@pytest.mark.parametrize("spec, field, bad, name", [
+    (_WP, "normalizer", {"type": "NFKC"}, "NFKC"),
+    (_WP, "normalizer", {"type": "Sequence", "normalizers": [
+        {"type": "Lowercase"}, {"type": "Replace"}]}, "Replace"),
+    (_WP, "pre_tokenizer", {"type": "Whitespace"}, "Whitespace"),
+    (_WP, "pre_tokenizer", {"type": "Sequence", "pretokenizers": [
+        {"type": "BertPreTokenizer"}]}, "Sequence"),
+    (_BPE, "normalizer", {"type": "Lowercase"}, "Lowercase"),
+    (_BPE, "pre_tokenizer", {"type": "Metaspace"}, "Metaspace"),
+])
+def test_unsupported_config_raises_naming_the_type(spec, field, bad, name):
+    with pytest.raises(ValueError, match=f"{field} type: {name}"):
+        Tokenizer({**spec, field: bad})
+
+
+@pytest.mark.parametrize("spec, field, ok", [
+    (_WP, "normalizer", {"type": "Sequence", "normalizers": [
+        {"type": "Lowercase"}, {"type": "StripAccents"}]}),
+    (_WP, "normalizer", None),
+    (_WP, "pre_tokenizer", None),
+    (_BPE, "pre_tokenizer", None),
+])
+def test_supported_config_accepted(spec, field, ok):
+    Tokenizer({**spec, field: ok})
+
+
+def test_unsupported_model_type_raises():
+    with pytest.raises(ValueError, match="Unigram"):
+        Tokenizer({"model": {"type": "Unigram", "vocab": []}})
+
+
 # -------------------------------------------- additivity (chunker relies)
 
 @pytest.mark.parametrize("fixture", ["bpe", "wp"])

@@ -11,8 +11,7 @@ from docling_spark.engine.chandrax import extract_chandra
 
 SRC = pathlib.Path("/root/reference/tests/data/html_chandra/sources")
 
-pytestmark = pytest.mark.skipif(
-    not SRC.exists(), reason="reference checkout not available")
+pytestmark = pytest.mark.requires_reference(SRC)
 
 
 def test_simple_parsing() -> None:

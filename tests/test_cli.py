@@ -10,8 +10,7 @@ import pytest
 
 REF = pathlib.Path("/root/reference/tests/data")
 
-pytestmark = pytest.mark.skipif(
-    not REF.exists(), reason="reference checkout not available")
+pytestmark = pytest.mark.requires_reference(REF)
 
 
 def test_parse_args_rejects_unknown_format():

@@ -28,9 +28,7 @@ from docling_spark.engine.docbinx import (
 SRC = pathlib.Path("/root/reference/tests/data/doc/sources")
 GT = pathlib.Path("/root/reference/tests/data/doc/groundtruth")
 
-pytestmark = pytest.mark.skipif(
-    not SRC.exists(), reason="reference checkout not available"
-)
+pytestmark = pytest.mark.requires_reference(SRC)
 
 
 def _words(s: str) -> set[str]:

@@ -71,7 +71,7 @@ REF_HTML = pathlib.Path("/root/reference/tests/data/html/sources")
 REF_MD = pathlib.Path("/root/reference/tests/data/md/sources")
 
 
-@pytest.mark.skipif(not REF_HTML.exists(), reason="no reference checkout")
+@pytest.mark.requires_reference(REF_HTML)
 def test_roundtrip_html_corpus_items() -> None:
     """serialize_doclang → extract_doclang reproduces every HTML-corpus
     document's markdown byte-exactly."""

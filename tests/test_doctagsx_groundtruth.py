@@ -46,8 +46,7 @@ def _pairs():
 
 PAIRS = _pairs()
 
-pytestmark = pytest.mark.skipif(
-    not PAIRS, reason="reference checkout not available")
+pytestmark = pytest.mark.requires_reference(DATA)
 
 
 def test_corpus_is_complete() -> None:

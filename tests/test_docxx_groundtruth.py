@@ -37,9 +37,7 @@ EXPECT_MATCH = [
     "word_image_anchors", "word_sample", "word_tables",
 ]
 
-pytestmark = pytest.mark.skipif(
-    not REF.exists(), reason="reference checkout not available"
-)
+pytestmark = pytest.mark.requires_reference(REF)
 
 
 @pytest.mark.parametrize("name", EXPECT_MATCH)

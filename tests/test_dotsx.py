@@ -84,7 +84,7 @@ def test_consecutive_list_items_group() -> None:
     assert text == "- one\n- two\n\nbreak\n\n- three"
 
 
-@pytest.mark.skipif(not SRC.exists(), reason="no reference checkout")
+@pytest.mark.requires_reference(SRC)
 def test_fixture_corpus_parses() -> None:
     for p in sorted(SRC.glob("*.json")):
         text, items, m = extract_dots(p.read_text())

@@ -16,9 +16,7 @@ GT = pathlib.Path("/root/reference/tests/data/ebcdic/groundtruth")
 
 NAMES = ["311_calls_for_service", "gas_disposition", "ola013k"]
 
-pytestmark = pytest.mark.skipif(
-    not SRC.exists(), reason="reference checkout not available"
-)
+pytestmark = pytest.mark.requires_reference(SRC)
 
 
 @pytest.mark.parametrize("name", NAMES)

@@ -15,8 +15,7 @@ from docling_spark.engine.extract import detect_format, extract_payload
 
 REF = pathlib.Path("/root/reference/tests/data/email/sources")
 
-needs_ref = pytest.mark.skipif(
-    not REF.exists(), reason="reference checkout not available")
+needs_ref = pytest.mark.requires_reference(REF)
 
 SIMPLE_EML = (
     "From: Alice Example <alice@example.com>\n"

@@ -28,7 +28,7 @@ def _fast_or_none(payload: str):
     return b.root if htmlx._fast_feed(payload, b) else None
 
 
-@pytest.mark.skipif(not REF_HTML.exists(), reason="no reference checkout")
+@pytest.mark.requires_reference(REF_HTML)
 @pytest.mark.parametrize(
     "name", sorted(p.stem for p in REF_HTML.glob("*.html")))
 def test_reference_corpus_tree_identical(name: str) -> None:

@@ -47,9 +47,7 @@ _CASES = [
 
 _STATUSES = {"success", "partial_success", "failure", "skipped"}
 
-pytestmark = pytest.mark.skipif(
-    not REF.exists(), reason="reference checkout not available"
-)
+pytestmark = pytest.mark.requires_reference(REF)
 
 
 def _first_file(p: pathlib.Path) -> pathlib.Path:

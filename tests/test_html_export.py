@@ -34,9 +34,7 @@ MD_SRC = pathlib.Path("/root/reference/tests/data/md/sources")
 
 MD_EXCLUDED = {"duck", "inline_and_formatting", "wiki"}
 
-pytestmark = pytest.mark.skipif(
-    not HTML_SRC.exists(), reason="reference checkout not available"
-)
+pytestmark = pytest.mark.requires_reference(HTML_SRC)
 
 
 def _html_names():
@@ -91,7 +89,7 @@ METS_SRC = pathlib.Path(
     "32044009881525_select.tar.gz")
 
 
-@pytest.mark.skipif(not METS_SRC.exists(), reason="no reference checkout")
+@pytest.mark.requires_reference(METS_SRC)
 def test_split_page_export_groups_by_page() -> None:
     import re
 

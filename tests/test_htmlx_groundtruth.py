@@ -49,9 +49,7 @@ EXPECT_MATCH = [
     "wiki_duck",
 ]
 
-pytestmark = pytest.mark.skipif(
-    not REF.exists(), reason="reference checkout not available"
-)
+pytestmark = pytest.mark.requires_reference(REF)
 
 
 @pytest.mark.parametrize("name", EXPECT_MATCH)

@@ -129,7 +129,7 @@ def test_extract_image_items():
     assert metrics["pages_parsed"] == 2 and metrics["n_items"] == 2
 
 
-@pytest.mark.skipif(not REF_TIFF.exists(), reason="reference corpus absent")
+@pytest.mark.requires_reference(REF_TIFF)
 def test_reference_multipage_tiff():
     data = REF_TIFF.read_bytes()
     pages = imagex.image_pages(data)
@@ -139,7 +139,7 @@ def test_reference_multipage_tiff():
     assert len({(w, h) for w, h in pages}) == 1  # uniform page size
 
 
-@pytest.mark.skipif(not REF_WEBP.exists(), reason="reference corpus absent")
+@pytest.mark.requires_reference(REF_WEBP)
 def test_reference_webp_sources():
     for p in sorted(REF_WEBP.glob("*.webp")):
         w, h = imagex.image_pages(p.read_bytes())[0]

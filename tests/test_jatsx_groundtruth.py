@@ -16,9 +16,7 @@ REF = pathlib.Path("/root/reference/tests/data/jats")
 NAMES = ["ptag100.xml", "elife-56337.nxml", "pntd.0008301.nxml",
          "pone.0234687.nxml"]
 
-pytestmark = pytest.mark.skipif(
-    not REF.exists(), reason="reference checkout not available"
-)
+pytestmark = pytest.mark.requires_reference(REF)
 
 
 @pytest.mark.parametrize("name", NAMES)

@@ -38,9 +38,7 @@ def _pairs():
 
 PAIRS = _pairs()
 
-pytestmark = pytest.mark.skipif(
-    not PAIRS, reason="reference checkout not available"
-)
+pytestmark = pytest.mark.requires_reference(HTML_GT)
 
 
 @pytest.mark.parametrize("stem,jf,mf", PAIRS, ids=[p[0] for p in PAIRS])

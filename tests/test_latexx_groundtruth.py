@@ -32,9 +32,7 @@ PINNED = [
 ]
 UNPINNED = ["0005057", "0106220", "9802040"]
 
-pytestmark = pytest.mark.skipif(
-    not BASE.exists(), reason="reference checkout not available"
-)
+pytestmark = pytest.mark.requires_reference(BASE)
 
 
 def _zip_tree(d: pathlib.Path) -> bytes:

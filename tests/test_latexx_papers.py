@@ -34,9 +34,7 @@ FLOORS = {
     "arXiv-2501.01300v2": (0.98, 0.98),
 }
 
-pytestmark = pytest.mark.skipif(
-    not SRC.exists(), reason="reference checkout not available"
-)
+pytestmark = pytest.mark.requires_reference(SRC)
 
 
 def _zip_tree(d: pathlib.Path) -> bytes:

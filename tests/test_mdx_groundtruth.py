@@ -25,9 +25,7 @@ NAMES = [
     "signature_stamp_01", "wiki",
 ]
 
-pytestmark = pytest.mark.skipif(
-    not REF.exists(), reason="reference checkout not available"
-)
+pytestmark = pytest.mark.requires_reference(REF)
 
 
 @pytest.mark.parametrize("name", NAMES)

@@ -16,8 +16,7 @@ SRC = pathlib.Path(
     "/root/reference/tests/data/mets_gbs/sources/"
     "32044009881525_select.tar.gz")
 
-pytestmark = pytest.mark.skipif(
-    not SRC.exists(), reason="reference checkout not available")
+pytestmark = pytest.mark.requires_reference(SRC)
 
 
 def test_reference_archive() -> None:

@@ -12,9 +12,7 @@ import pytest
 
 REF = pathlib.Path("/root/reference/tests/data")
 
-pytestmark = pytest.mark.skipif(
-    not REF.exists(), reason="reference checkout not available"
-)
+pytestmark = pytest.mark.requires_reference(REF)
 
 CSV_NAMES = [
     "csv-comma-in-cell", "csv-comma", "csv-inconsistent-header",

@@ -19,9 +19,7 @@ NAMES = [
     "odf_presentation_01.odp", "odf_presentation_02.odp",
 ]
 
-pytestmark = pytest.mark.skipif(
-    not REF.exists(), reason="reference checkout not available"
-)
+pytestmark = pytest.mark.requires_reference(REF)
 
 
 @pytest.mark.parametrize("name", NAMES)

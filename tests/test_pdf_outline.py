@@ -14,9 +14,7 @@ from docling_spark.engine.pdfx import PdfDocument, extract_pdf, pdf_outline
 
 SAMPLE = pathlib.Path("/root/reference/tests/data/pdf/bookmark_sample.pdf")
 
-pytestmark = pytest.mark.skipif(
-    not SAMPLE.exists(), reason="reference checkout not available"
-)
+pytestmark = pytest.mark.requires_reference(SAMPLE)
 
 
 def _outline():

@@ -47,9 +47,7 @@ FLOORS = {
     "table_mislabeled_as_picture": (0.95, 0.92),
 }
 
-pytestmark = pytest.mark.skipif(
-    not SRC.exists(), reason="reference checkout not available"
-)
+pytestmark = pytest.mark.requires_reference(SRC)
 
 
 def _words(s: str) -> set[str]:

@@ -22,9 +22,7 @@ from docling_spark.engine.pptbinx import (
 
 REF = pathlib.Path("/root/reference/tests/data/ppt")
 
-pytestmark_ref = pytest.mark.skipif(
-    not REF.exists(), reason="reference checkout not available"
-)
+pytestmark_ref = pytest.mark.requires_reference(REF)
 
 
 def _itxt(items) -> str:

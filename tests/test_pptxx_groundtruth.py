@@ -19,9 +19,7 @@ NAMES = [
     "powerpoint_unrecognized_shape", "powerpoint_with_image", "pptx_chart",
 ]
 
-pytestmark = pytest.mark.skipif(
-    not REF.exists(), reason="reference checkout not available"
-)
+pytestmark = pytest.mark.requires_reference(REF)
 
 
 @pytest.mark.parametrize("name", NAMES)

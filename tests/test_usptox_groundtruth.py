@@ -16,9 +16,7 @@ REF = pathlib.Path("/root/reference/tests/data/uspto")
 NAMES = ["ipa20180000016.xml", "ipa20200022300.xml", "pa20010031492.xml",
          "pftaps057006474.txt", "pg06442728.xml"]
 
-pytestmark = pytest.mark.skipif(
-    not REF.exists(), reason="reference checkout not available"
-)
+pytestmark = pytest.mark.requires_reference(REF)
 
 
 @pytest.mark.parametrize("name", NAMES)

@@ -58,7 +58,7 @@ def test_svg_pages_totality_and_escaping():
     ET.fromstring(svg)
 
 
-@pytest.mark.skipif(not PDF_SRC.exists(), reason="no reference checkout")
+@pytest.mark.requires_reference(PDF_SRC)
 def test_pdf_debug_svg_real_corpus():
     from docling_spark.engine.visualize import pdf_debug_svg
 

@@ -26,8 +26,7 @@ import pytest
 SRC = pathlib.Path("/root/reference/tests/data/xbrl/sources")
 GT = pathlib.Path("/root/reference/tests/data/xbrl/groundtruth")
 
-needs_ref = pytest.mark.skipif(
-    not SRC.exists(), reason="reference checkout not available")
+needs_ref = pytest.mark.requires_reference(SRC)
 
 FIXTURES = [
     ("mlac-20251231.xml", "mlac-taxonomy"),

@@ -16,9 +16,7 @@ from docling_spark.engine.xlsbinx import XlsError, extract_xls, synthesize_xls
 
 REF = pathlib.Path("/root/reference/tests/data/xls")
 
-pytestmark_ref = pytest.mark.skipif(
-    not REF.exists(), reason="reference checkout not available"
-)
+pytestmark_ref = pytest.mark.requires_reference(REF)
 
 
 def _itxt(items) -> str:

@@ -22,9 +22,7 @@ NAMES = [
     "xlsx_emf.xlsx",
 ]
 
-pytestmark = pytest.mark.skipif(
-    not REF.exists(), reason="reference checkout not available"
-)
+pytestmark = pytest.mark.requires_reference(REF)
 
 
 @pytest.mark.parametrize("name", NAMES)

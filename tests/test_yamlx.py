@@ -23,7 +23,7 @@ MD_GT = pathlib.Path("/root/reference/tests/data/md/groundtruth")
 YAML_PAIRS = sorted(MD_GT.glob("*.md.yaml")) if MD_GT.exists() else []
 
 
-@pytest.mark.skipif(not YAML_PAIRS, reason="reference checkout unavailable")
+@pytest.mark.requires_reference(MD_GT)
 def test_reference_yaml_corpus_is_covered():
     assert len(YAML_PAIRS) == 2
 
