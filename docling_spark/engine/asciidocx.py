@@ -30,6 +30,8 @@ from __future__ import annotations
 
 import re
 
+from docling_spark.engine.htmlx import new_items, result
+
 _CELL_SPEC = r"(?:\d+(?:\.\d+)?[*+])*[<^>]?(?:\.[<^>])?[adehlms]?"
 
 _TITLE_RE = re.compile(r"^= ")
@@ -55,10 +57,7 @@ def _mk(items: list[dict], parent: int, label: str, text: str) -> int:
 
 def extract_asciidoc(payload: str) -> tuple[str, list[dict], dict]:
     lines = payload.split("\n")
-    items: list[dict] = [
-        dict(item_idx=0, parent_idx=-1, label="unspecified", level=0,
-             text="_root_", content_layer="body", span_start=-1, span_end=-1)
-    ]
+    items = new_items()
     # level → item_idx (None = unset), mirroring the reference's parents dict
     parents: dict[int, int | None] = {i: None for i in range(10)}
     indents: dict[int, int | None] = {i: None for i in range(10)}
@@ -186,14 +185,7 @@ def extract_asciidoc(payload: str) -> tuple[str, list[dict], dict]:
     if in_table and table_data:
         flush_table()
 
-    md = _serialize_md(items)
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(items) - 1,
-    }
-    return md, items, metrics
+    return result(items, _serialize_md(items))
 
 
 def _escape(text: str) -> str:

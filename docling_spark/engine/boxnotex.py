@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import json
 
-from docling_spark.engine.htmlx import Item, _mk_item, _norm_href, serialize_items
+from docling_spark.engine.htmlx import Item, _mk_item, _norm_href, new_items, result
 
 _WEB_SCHEMES = ("http://", "https://")
 
@@ -97,8 +97,7 @@ def extract_boxnote(payload: str) -> tuple[str, list[Item], dict]:
     if root.get("type") != "doc":
         raise BoxNoteError("not a Box Note payload (missing doc root)")
 
-    items: list[Item] = []
-    _mk_item(items, -1, "unspecified", 0, "_root_", "body")
+    items = new_items()
 
     def add_blocks(nodes: list, parent: int, level: int) -> None:
         for node in nodes or []:
@@ -264,11 +263,4 @@ def extract_boxnote(payload: str) -> tuple[str, list[Item], dict]:
             add_blocks(content, parent, level)
 
     add_blocks(root.get("content") or [], 0, 1)
-    text = serialize_items(items, layer="body")
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(items) - 1,
-    }
-    return text, items, metrics
+    return result(items)

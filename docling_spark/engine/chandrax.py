@@ -23,7 +23,8 @@ from docling_spark.engine.htmlx import (
     HtmlExtractor,
     Item,
     _mk_item,
-    serialize_items,
+    new_items,
+    result,
 )
 
 _DIV_RE = re.compile(r"<div\s+([^>]*?)>(.*?)</div>", re.DOTALL)
@@ -68,8 +69,7 @@ def looks_like_chandra(text: str) -> bool:
 
 def extract_chandra(payload: str) -> tuple[str, list[Item], dict]:
     """payload (chandra-ocr-2 HTML) → (extracted_text, items, metrics)."""
-    items: list[Item] = []
-    _mk_item(items, -1, "unspecified", 0, "_root_", "body")
+    items = new_items()
     hstack: list[int] = []  # current section parent
 
     def parent() -> int:
@@ -120,15 +120,11 @@ def extract_chandra(payload: str) -> tuple[str, list[Item], dict]:
             items[idx]["_hlevel"] = max(2, int(hm.group(1)) if hm else 2)
             hstack[:] = [idx]
 
-    text = serialize_items(items, layer="body")
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": (n_kept / n_divs) if n_divs else 1.0,
-        "boilerplate_ratio": (
+    return result(
+        items, parse_score=(n_kept / n_divs) if n_divs else 1.0,
+        boilerplate_ratio=(
             1.0 - sum(1 for it in items[1:]
                       if it["content_layer"] == "body")
             / max(len(items) - 1, 1) if len(items) > 1 else 0.0
         ),
-        "n_items": len(items) - 1,
-    }
-    return text, items, metrics
+    )

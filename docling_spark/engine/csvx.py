@@ -12,6 +12,7 @@ from __future__ import annotations
 import csv
 import io
 
+from docling_spark.engine.htmlx import new_items, result
 from docling_spark.functions.textnorm import clean_unicode
 
 DELIMITERS = [",", ";", "\t", "|", ":"]
@@ -66,16 +67,8 @@ def extract_csv(payload: str) -> tuple[str, list[dict], dict]:
         if ri == 0:
             md_lines.append("| " + " | ".join("-" for _ in r) + " |")
     text = "\n".join(md_lines)
-    items = [
-        dict(item_idx=0, parent_idx=-1, label="unspecified", level=0,
-             text="_root_", content_layer="body", span_start=-1, span_end=-1),
-        dict(item_idx=1, parent_idx=0, label="table", level=1, text=text,
-             content_layer="body", span_start=0, span_end=len(text)),
-    ]
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": 1,
-    }
-    return text, items, metrics
+    items = new_items()
+    items.append(dict(item_idx=1, parent_idx=0, label="table", level=1,
+                      text=text, content_layer="body", span_start=0,
+                      span_end=len(text)))
+    return result(items, text)

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import re
 
-from docling_spark.engine.htmlx import Item, _mk_item, serialize_items
+from docling_spark.engine.htmlx import Item, _mk_item, new_items, result
 
 _ANNOT_RE = re.compile(
     r"^(?:<\|ref\|>)?(\w+)(?:<\|/ref\|>)?(?:<\|det\|>)?"
@@ -109,8 +109,7 @@ def extract_deepseek(payload: str) -> tuple[str, list[Item], dict]:
                 continue
         i += 1
 
-    items: list[Item] = []
-    _mk_item(items, -1, "unspecified", 0, "_root_", "body")
+    items = new_items()
 
     def _text_md(t: str) -> str:
         t = " ".join(t.split())
@@ -160,11 +159,4 @@ def extract_deepseek(payload: str) -> tuple[str, list[Item], dict]:
                 lbl = "caption" if label in _CAPTIONS else "text"
                 _mk_item(items, 0, lbl, 1, t, layer)
 
-    text = serialize_items(items, layer="body")
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(items) - 1,
-    }
-    return text, items, metrics
+    return result(items)

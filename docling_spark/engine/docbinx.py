@@ -36,7 +36,7 @@ import bisect
 import re
 import struct
 
-from docling_spark.engine.htmlx import Item, _mk_item, serialize_items
+from docling_spark.engine.htmlx import Item, _mk_item, new_items, result
 from docling_spark.engine.olex import OleError, OleFile
 
 __all__ = ["DocBinError", "extract_doc", "synthesize_doc",
@@ -400,8 +400,7 @@ def extract_doc(payload: bytes) -> tuple[str, list[Item], dict]:
     except struct.error as exc:
         raise DocBinError(f"malformed Word structures: {exc}") from exc
 
-    items: list[Item] = []
-    _mk_item(items, -1, "unspecified", 0, "_root_", "body")
+    items = new_items()
     hstack: list[tuple[int, int]] = []
 
     def parent() -> int:
@@ -557,14 +556,7 @@ def extract_doc(payload: bytes) -> tuple[str, list[Item], dict]:
             list_group = -1
     flush_table()
 
-    extracted = serialize_items(items, layer="body")
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(items) - 1,
-    }
-    return extracted, items, metrics
+    return result(items)
 
 
 def synthesize_doc(text: str) -> bytes:

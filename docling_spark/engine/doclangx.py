@@ -28,7 +28,7 @@ import re
 import zipfile
 import xml.etree.ElementTree as ET
 
-from docling_spark.engine.htmlx import Item, _mk_item, serialize_items
+from docling_spark.engine.htmlx import Item, _mk_item, new_items, result
 
 
 class DocLangError(ValueError):
@@ -63,8 +63,7 @@ def extract_doclang(payload: bytes | str) -> tuple[str, list[Item], dict]:
     if root.tag != "doclang":
         raise DocLangError(f"root element is <{root.tag}>, not <doclang>")
 
-    items: list[Item] = []
-    _mk_item(items, -1, "unspecified", 0, "_root_", "body")
+    items = new_items()
     seen_heading = False
 
     def handle_table(el: ET.Element, par: int, lvl: int) -> None:
@@ -178,14 +177,7 @@ def extract_doclang(payload: bytes | str) -> tuple[str, list[Item], dict]:
                 walk(ch, par, lvl)  # unknown container: recurse
 
     walk(root, 0, 1)
-    text = serialize_items(items, layer="body")
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(items) - 1,
-    }
-    return text, items, metrics
+    return result(items)
 
 
 def _xml_escape(s: str) -> str:

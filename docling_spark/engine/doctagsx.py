@@ -36,7 +36,7 @@ from __future__ import annotations
 
 import re
 
-from docling_spark.engine.htmlx import Item, _mk_item, serialize_items
+from docling_spark.engine.htmlx import _mk_item, new_items, result
 
 
 class DocTagsError(ValueError):
@@ -145,8 +145,7 @@ def extract_doctags(payload: str) -> tuple[str, list[dict], dict]:
         m.group(1) for m in
         re.finditer(r"<doctag>(.*?)(?:</doctag>|$)", payload, re.S))
 
-    items: list[Item] = []
-    _mk_item(items, -1, "unspecified", 0, "_root_", "body")
+    items = new_items()
     page = 1
     n_pages = 1
 
@@ -233,12 +232,8 @@ def extract_doctags(payload: str) -> tuple[str, list[dict], dict]:
             label, layer = _LEAF[tag]
             leaf(label, layer, _ctext(content))
 
-    extracted = serialize_items(items, layer="body")
     n_body = sum(1 for it in items[1:] if it["content_layer"] == "body")
-    metrics = {
-        "pages_parsed": n_pages,
-        "parse_score": 1.0,
-        "boilerplate_ratio": round(1.0 - n_body / max(len(items) - 1, 1), 6),
-        "n_items": len(items) - 1,
-    }
-    return extracted, items, metrics
+    return result(
+        items, pages_parsed=n_pages,
+        boilerplate_ratio=round(1.0 - n_body / max(len(items) - 1, 1), 6),
+    )

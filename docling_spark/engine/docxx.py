@@ -29,7 +29,8 @@ from docling_spark.engine.htmlx import (
     Item,
     _mk_item,
     _Run,
-    serialize_items,
+    new_items,
+    result,
 )
 from docling_spark.engine.ommlx import paragraph_equations
 
@@ -453,8 +454,7 @@ def extract_docx(payload: bytes) -> tuple[str, list[Item], dict]:
     if body is None:
         raise DocxError("document.xml has no body")
 
-    items: list[Item] = []
-    _mk_item(items, -1, "unspecified", 0, "_root_", "body")
+    items = new_items()
     ex = HtmlExtractor()  # serializer helpers only (no HTML parsed)
 
     hstack: list[tuple[int, int]] = []  # (heading_level, item_idx)
@@ -1038,11 +1038,4 @@ def extract_docx(payload: bytes) -> tuple[str, list[Item], dict]:
     flush_mono()
     for it in items:
         it.pop("_docx_code", None)
-    text = serialize_items(items, layer="body")
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(items) - 1,
-    }
-    return text, items, metrics
+    return result(items)

@@ -22,7 +22,8 @@ from docling_spark.engine.htmlx import (
     HtmlExtractor,
     Item,
     _mk_item,
-    serialize_items,
+    new_items,
+    result,
 )
 
 _FURNITURE = {"Page-header", "Page-footer"}
@@ -47,13 +48,9 @@ def _clean_json(raw: str) -> str:
 
 def extract_dots(payload: str) -> tuple[str, list[Item], dict]:
     """payload (dots.ocr JSON) → (extracted_text, items, metrics)."""
-    items: list[Item] = []
-    _mk_item(items, -1, "unspecified", 0, "_root_", "body")
+    items = new_items()
     if not payload or not payload.strip():
-        return "", items, {
-            "pages_parsed": 1, "parse_score": 1.0,
-            "boilerplate_ratio": 0.0, "n_items": 0,
-        }
+        return result(items, "")
     try:
         elements = json.loads(_clean_json(payload))
     except json.JSONDecodeError:
@@ -122,15 +119,11 @@ def extract_dots(payload: str) -> tuple[str, list[Item], dict]:
             if t:
                 _mk_item(items, parent(), "text", 1, t, layer)
 
-    text_out = serialize_items(items, layer="body")
     n_body = sum(1 for it in items[1:] if it["content_layer"] == "body")
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": (n_kept / n_seen) if n_seen else 1.0,
-        "boilerplate_ratio": (
+    return result(
+        items, parse_score=(n_kept / n_seen) if n_seen else 1.0,
+        boilerplate_ratio=(
             1.0 - n_body / max(len(items) - 1, 1) if len(items) > 1
             else 0.0
         ),
-        "n_items": len(items) - 1,
-    }
-    return text_out, items, metrics
+    )

@@ -23,7 +23,7 @@ import json
 import re
 from decimal import Decimal
 
-from docling_spark.engine.htmlx import Item, _mk_item, serialize_items
+from docling_spark.engine.htmlx import Item, _mk_item, new_items, result
 
 _CONTROL_RE = re.compile(r"[\x00-\x1f\x7f-\x9f]")
 _NEGATIVE_SIGNS = frozenset({0xB, 0xD})
@@ -162,8 +162,7 @@ def extract_ebcdic(payload: str) -> tuple[str, list[Item], dict]:
     schemas, rows = _parse_records(layout, data, decoder,
                                    wrapper.get("max_records"))
 
-    items: list[Item] = []
-    _mk_item(items, -1, "unspecified", 0, "_root_", "body")
+    items = new_items()
     if layout.get("description"):
         _mk_item(items, 0, "text", 1, layout["description"], "body")
     n_records = 0
@@ -187,11 +186,4 @@ def extract_ebcdic(payload: str) -> tuple[str, list[Item], dict]:
         items[tidx]["num_rows"] = len(srows) + 1
         items[tidx]["num_cols"] = len(header)
 
-    text = serialize_items(items, layer="body")
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(items) - 1,
-    }
-    return text, items, metrics
+    return result(items)

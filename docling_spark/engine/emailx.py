@@ -18,6 +18,8 @@ from email.header import decode_header
 from email.parser import Parser
 from email.utils import getaddresses, parsedate_to_datetime
 
+from docling_spark.engine.htmlx import new_items, result
+
 _PARA_SPLIT = re.compile(r"\n\s*\n+")
 
 # header sniff for format routing: at least two of these at line starts in
@@ -156,10 +158,7 @@ def extract_email(payload: str) -> tuple[str, list[dict], dict]:
     date_text = _date_text(msg.get("Date"))
     paragraphs = _body_paragraphs(msg)
 
-    items: list[dict] = [
-        dict(item_idx=0, parent_idx=-1, label="unspecified", level=0,
-             text="_root_", content_layer="body", span_start=-1, span_end=-1)
-    ]
+    items = new_items()
     out_parts: list[str] = []
     pos = 0
     parent = 0
@@ -189,10 +188,4 @@ def extract_email(payload: str) -> tuple[str, list[dict], dict]:
     for p in paragraphs:
         _append("text", p, p, parent)
 
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(items) - 1,
-    }
-    return "\n\n".join(out_parts), items, metrics
+    return result(items, "\n\n".join(out_parts))

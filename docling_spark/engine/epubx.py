@@ -21,7 +21,7 @@ import re
 import zipfile
 import xml.etree.ElementTree as ET
 
-from docling_spark.engine.htmlx import HtmlExtractor, Item, serialize_items
+from docling_spark.engine.htmlx import HtmlExtractor, Item, result
 
 
 class EpubError(ValueError):
@@ -91,12 +91,4 @@ def extract_epub(payload: bytes) -> tuple[str, list[Item], dict]:
     if n_read == 0:
         raise EpubError("no readable content documents in spine")
     html = "\n".join(parts)
-    items = HtmlExtractor().extract(html)
-    text = serialize_items(items, layer="body")
-    metrics = {
-        "pages_parsed": n_read,
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(items) - 1,
-    }
-    return text, items, metrics
+    return result(HtmlExtractor().extract(html), pages_parsed=n_read)

@@ -220,69 +220,42 @@ def _project_item(it: dict) -> dict:
     return out
 
 
-_EMPTY_METRICS = {
-    "pages_parsed": 0,
-    "parse_score": 0.0,
-    "boilerplate_ratio": 0.0,
-    "n_items": 0,
-}
+_EMPTY_METRICS = htmlx.make_metrics(0, pages_parsed=0, parse_score=0.0)
 
 
 def _plain_result(text: str) -> tuple[str, list[dict], dict]:
     norm = normalize_plain(text)
-    items = [
-        dict(item_idx=0, parent_idx=-1, label="unspecified", level=0,
-             text="_root_", content_layer="body", span_start=-1, span_end=-1),
-    ]
+    items = htmlx.new_items()
     if norm:
         items.append(
             dict(item_idx=1, parent_idx=0, label="text", level=1, text=norm,
                  content_layer="body", span_start=0, span_end=len(norm))
         )
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": rate_text_quality(norm),
-        "boilerplate_ratio": 0.0,
-        "n_items": len(items) - 1,
-    }
-    return norm, items, metrics
+    return htmlx.result(items, norm, parse_score=rate_text_quality(norm))
 
 
 def _code_result(text: str) -> tuple[str, list[dict], dict]:
     """Tool-output blobs pass through newline-preserving as code items
     (html_backend.py:2740-2771 pre semantics)."""
     body = text.strip("\n").rstrip()
-    rendered = "```\n" + body + "\n```"
-    items = [
-        dict(item_idx=0, parent_idx=-1, label="unspecified", level=0,
-             text="_root_", content_layer="body", span_start=-1, span_end=-1),
-        # span delimits the item TEXT inside extracted_text (the same
-        # exactness _plain_result keeps): fences are rendering, not item
+    items = htmlx.new_items()
+    # span delimits the item TEXT inside extracted_text (the same
+    # exactness _plain_result keeps): fences are rendering, not item
+    items.append(
         dict(item_idx=1, parent_idx=0, label="code", level=1, text=body,
-             content_layer="body", span_start=4, span_end=4 + len(body)),
-    ]
-    lang = htmlx.detect_code_language(body)
-    items[1]["code_language"] = lang
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": rate_text_quality(body),
-        "boilerplate_ratio": 0.0,
-        "n_items": 1,
-    }
-    return rendered, items, metrics
+             content_layer="body", span_start=4, span_end=4 + len(body),
+             code_language=htmlx.detect_code_language(body))
+    )
+    return htmlx.result(items, "```\n" + body + "\n```",
+                        parse_score=rate_text_quality(body))
 
 
 def _html_result(text: str) -> tuple[str, list[dict], dict]:
     extracted, items = htmlx.extract_html(text)
     n_body = sum(1 for it in items[1:] if it["content_layer"] == "body")
     n_all = max(len(items) - 1, 1)
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": 1.0,
-        "boilerplate_ratio": 1.0 - n_body / n_all,
-        "n_items": len(items) - 1,
-    }
-    return extracted, items, metrics
+    return htmlx.result(items, extracted,
+                        boilerplate_ratio=1.0 - n_body / n_all)
 
 
 class _Unavailable(Exception):

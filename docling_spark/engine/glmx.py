@@ -31,7 +31,7 @@ from __future__ import annotations
 import json
 import re
 
-from docling_spark.engine.htmlx import Item, _mk_item, serialize_items
+from docling_spark.engine.htmlx import _mk_item, new_items, result
 
 
 class GlmError(ValueError):
@@ -160,8 +160,7 @@ def extract_glm(payload: str, update_name_label: bool = False
             if m.get("type") == "semantic":
                 props.setdefault(str(m.get("subj_path")), []).append(m)
 
-    items: list[Item] = []
-    _mk_item(items, -1, "unspecified", 0, "_root_", "body")
+    items = new_items()
 
     current_list: int | None = None
     total = unresolved = 0
@@ -244,13 +243,10 @@ def extract_glm(payload: str, update_name_label: bool = False
             current_list = None
             unresolved += 1
 
-    extracted = serialize_items(items, layer="body")
     n_body = sum(1 for it in items[1:] if it["content_layer"] == "body")
-    metrics = {
-        "pages_parsed": len(doc.get("page-dimensions", [])) or 1,
-        "parse_score": 1.0 if total == 0 else
+    return result(
+        items, pages_parsed=len(doc.get("page-dimensions", [])) or 1,
+        parse_score=1.0 if total == 0 else
         round((total - unresolved) / total, 6),
-        "boilerplate_ratio": round(1.0 - n_body / max(len(items) - 1, 1), 6),
-        "n_items": len(items) - 1,
-    }
-    return extracted, items, metrics
+        boilerplate_ratio=round(1.0 - n_body / max(len(items) - 1, 1), 6),
+    )

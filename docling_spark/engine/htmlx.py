@@ -438,6 +438,36 @@ def _mk_item(
     return idx
 
 
+# the engine result contract: every format engine returns
+# (extracted_text, items, metrics), items[0] the body root, metrics
+# keyed as schema.METRICS_SCHEMA
+def new_items() -> list[Item]:
+    """An item list holding only the body root."""
+    items: list[Item] = []
+    _mk_item(items, -1, "unspecified", 0, "_root_", "body")
+    return items
+
+
+def make_metrics(n_items: int, *, pages_parsed: int = 1,
+                 parse_score: float = 1.0,
+                 boilerplate_ratio: float = 0.0) -> dict:
+    return {
+        "pages_parsed": pages_parsed,
+        "parse_score": parse_score,
+        "boilerplate_ratio": boilerplate_ratio,
+        "n_items": n_items,
+    }
+
+
+def result(items: list[Item], text: str | None = None,
+           **metrics) -> tuple[str, list[Item], dict]:
+    """An engine's return value; ``text`` defaults to the serialized
+    body layer, ``metrics`` are :func:`make_metrics` keywords."""
+    if text is None:
+        text = serialize_items(items, layer="body")
+    return text, items, make_metrics(len(items) - 1, **metrics)
+
+
 _BARE_URL_RE = re.compile(r"^[a-z][a-z0-9+.-]*://[^/]+$")
 
 # form/key-value machinery (html_backend.py:169-175): a container with class
@@ -483,9 +513,8 @@ class HtmlExtractor:
     # -- public ------------------------------------------------------------
     def extract(self, payload: str) -> list[Item]:
         root = parse_html(payload)
-        self.items: list[Item] = []
+        self.items = new_items()
         self._hstack: list[tuple[int, int, int]] = []  # (hlevel, item_idx, level)
-        _mk_item(self.items, -1, "unspecified", 0, "_root_", "body")
 
         # title → furniture title item (html_backend.py:532-541)
         title_el = self._find_first(root, "title")

@@ -22,6 +22,8 @@ from __future__ import annotations
 
 import struct
 
+from docling_spark.engine.htmlx import new_items, result
+
 __all__ = ["sniff_image", "image_pages", "extract_image"]
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -247,10 +249,7 @@ def extract_image(data: bytes) -> tuple[str, list[dict], dict]:
     item with no text (image_backend.py:74-90), serialized to markdown as
     the picture placeholder. Page pixel sizes ride in the metrics."""
     pages = image_pages(data)
-    items: list[dict] = [
-        dict(item_idx=0, parent_idx=-1, label="unspecified", level=0,
-             text="_root_", content_layer="body", span_start=-1, span_end=-1),
-    ]
+    items = new_items()
     for _ in pages:
         items.append(
             dict(item_idx=len(items), parent_idx=0, label="picture", level=1,
@@ -258,11 +257,5 @@ def extract_image(data: bytes) -> tuple[str, list[dict], dict]:
         )
     # dims/format surface is :func:`image_pages`; metrics stay on the fixed
     # sidecar schema (schema.py METRICS_SCHEMA)
-    extracted = "\n\n".join("<!-- image -->" for _ in pages)
-    metrics = {
-        "pages_parsed": len(pages),
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(pages),
-    }
-    return extracted, items, metrics
+    return result(items, "\n\n".join("<!-- image -->" for _ in pages),
+                  pages_parsed=len(pages))

@@ -15,7 +15,7 @@ from __future__ import annotations
 import re
 import xml.etree.ElementTree as ET
 
-from docling_spark.engine.htmlx import Item, _mk_item, serialize_items
+from docling_spark.engine.htmlx import Item, _mk_item, new_items, result
 
 HDR_ACK = "Acknowledgments"
 HDR_ABSTRACT = "Abstract"
@@ -157,8 +157,7 @@ def _seg_md(s: _Seg) -> str:
 class _Converter:
     def __init__(self, root):
         self.tree = root
-        self.items: list[Item] = []
-        _mk_item(self.items, -1, "unspecified", 0, "_root_", "body")
+        self.items = new_items()
         self.hlevel = 0
         self.hstack: list[int] = [0]  # parent item idx stack
 
@@ -718,11 +717,4 @@ def extract_jats(payload: str) -> tuple[str, list[Item], dict]:
     back = root.find(".//back")
     if back is not None:
         conv.walk(0, back)
-    text = serialize_items(conv.items, layer="body")
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(conv.items) - 1,
-    }
-    return text, conv.items, metrics
+    return result(conv.items)

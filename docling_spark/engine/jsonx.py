@@ -17,7 +17,8 @@ from docling_spark.engine.htmlx import (
     Item,
     _mk_item,
     _norm_href,
-    serialize_items,
+    new_items,
+    result,
 )
 
 
@@ -161,8 +162,7 @@ def _table_md(data: dict, rich: list[tuple[str, str]] | None = None
 class _Converter:
     def __init__(self, doc: dict):
         self.doc = doc
-        self.items: list[Item] = []
-        _mk_item(self.items, -1, "unspecified", 0, "_root_", "body")
+        self.items = new_items()
         self.rendered_captions: set[str] = set()
 
     def resolve(self, ref) -> dict:
@@ -462,14 +462,8 @@ def extract_docling_json(payload: str) -> tuple[str, list[Item], dict]:
     body = doc.get("body") or {}
     for ch in body.get("children", []):
         conv.walk(conv.resolve(ch), 0, 1)
-    text = serialize_items(conv.items, layer="body")
-    metrics = {
-        "pages_parsed": max(len(doc.get("pages") or {}), 1),
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(conv.items) - 1,
-    }
-    return text, conv.items, metrics
+    return result(conv.items,
+                  pages_parsed=max(len(doc.get("pages") or {}), 1))
 
 
 def extract_docling_yaml(payload: str) -> tuple[str, list[Item], dict]:

@@ -18,7 +18,7 @@ guard and depth limit 10, handlers/macros.py:368-399).
 
 from __future__ import annotations
 
-from docling_spark.engine.htmlx import Item, serialize_items
+from docling_spark.engine.htmlx import Item, result
 from docling_spark.engine.texwalk import walk_latex
 
 
@@ -35,14 +35,7 @@ def extract_latex(payload: str, files: dict[str, str] | None = None
         items = walk_latex(payload, files)
     except RecursionError as exc:
         raise LatexError(f"nesting too deep: {exc}") from exc
-    text = serialize_items(items, layer="body")
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(items) - 1,
-    }
-    return text, items, metrics
+    return result(items)
 
 
 def extract_latex_archive(payload: bytes) -> tuple[str, list[Item], dict]:

@@ -29,6 +29,7 @@ import json
 import math
 import re
 
+from docling_spark.engine.htmlx import new_items, result
 from docling_spark.functions.textnorm import (
     fix_stx,
     rate_text_quality,
@@ -684,12 +685,7 @@ def extract_from_cells(
     ordered = _assemble_tables(ordered)
     blocks = _merge_text_blocks(ordered)
 
-    items: list[dict] = [
-        dict(
-            item_idx=0, parent_idx=-1, label="unspecified", level=0,
-            text="_root_", content_layer="body", span_start=-1, span_end=-1,
-        )
-    ]
+    items = new_items()
     out_parts: list[str] = []
     pos = 0
     heading_idx = 0
@@ -744,12 +740,10 @@ def extract_from_cells(
 
     pages = {c["page_no"] for c in raw}  # empty doc -> 0 pages, not 1
     n_body = sum(1 for it in items[1:] if it["content_layer"] == "body")
-    metrics = {
-        "pages_parsed": len(pages),
-        "parse_score": float(parse_score),
-        "boilerplate_ratio": (
+    return result(
+        items, "\n\n".join(out_parts), pages_parsed=len(pages),
+        parse_score=float(parse_score),
+        boilerplate_ratio=(
             1.0 - n_body / max(len(items) - 1, 1) if len(items) > 1 else 0.0
         ),
-        "n_items": len(items) - 1,
-    }
-    return "\n\n".join(out_parts), items, metrics
+    )

@@ -35,6 +35,8 @@ from docling_spark.engine.htmlx import (
     Item,
     _mk_item,
     _norm_href,
+    new_items,
+    result,
     serialize_items,
 )
 
@@ -894,23 +896,8 @@ def extract_markdown(payload: str) -> tuple[str, list[Item], dict]:
         # blocks, and re-parses with the HTML backend (md_backend.py:710-757)
         html_doc = _blocks_to_html(blocks)
         items = HtmlExtractor(infer_furniture=False).extract(html_doc)
-        text = serialize_items(items, layer="body")
-        metrics = {
-            "pages_parsed": 1,
-            "parse_score": 1.0,
-            "boilerplate_ratio": 0.0,
-            "n_items": len(items) - 1,
-        }
-        return text, items, metrics
+        return result(items)
 
-    items: list[Item] = []
-    _mk_item(items, -1, "unspecified", 0, "_root_", "body")
+    items = new_items()
     _emit_items(blocks, items)
-    text = serialize_items(items, layer="body")
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(items) - 1,
-    }
-    return text, items, metrics
+    return result(items)

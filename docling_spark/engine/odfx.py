@@ -22,7 +22,7 @@ import re
 import zipfile
 import xml.etree.ElementTree as ET
 
-from docling_spark.engine.htmlx import Item, _mk_item, serialize_items
+from docling_spark.engine.htmlx import Item, _mk_item, new_items, result
 from docling_spark.engine.xlsxx import _chart_table_md, _num_text
 
 NS = {
@@ -370,8 +370,7 @@ class _Converter:
     def __init__(self, odf: _Odf):
         self.odf = odf
         self.styles = odf.styles
-        self.items: list[Item] = []
-        _mk_item(self.items, -1, "unspecified", 0, "_root_", "body")
+        self.items = new_items()
 
     # ------------------------------------------------------------- charts
     def add_charts(self, el: ET.Element, parent: int) -> int:
@@ -1048,11 +1047,4 @@ def extract_odf(payload: bytes, kind: str) -> tuple[str, list[Item], dict]:
         items = _extract_ods(odf)
     else:
         items = _extract_odp(odf)
-    text = serialize_items(items, layer="body")
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(items) - 1,
-    }
-    return text, items, metrics
+    return result(items)

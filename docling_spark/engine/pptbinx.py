@@ -36,7 +36,7 @@ from __future__ import annotations
 
 import struct
 
-from docling_spark.engine.htmlx import Item, _mk_item, serialize_items
+from docling_spark.engine.htmlx import Item, _mk_item, new_items, result
 from docling_spark.engine.olex import OleError, OleFile
 
 __all__ = ["PptError", "extract_ppt", "synthesize_ppt"]
@@ -502,8 +502,7 @@ def extract_ppt(payload: bytes) -> tuple[str, list[Item], dict]:
             txtype, text, pf_runs = slwt[sh.outline_ref]
             sh.txtype, sh.text, sh.pf_runs = txtype, text, pf_runs
 
-    items: list[Item] = []
-    _mk_item(items, -1, "unspecified", 0, "_root_", "body")
+    items = new_items()
     n_slides = 0
     for off, slwt in entries:
         vi, rt, ln = struct.unpack_from("<HHI", ppt, off)
@@ -521,14 +520,7 @@ def extract_ppt(payload: bytes) -> tuple[str, list[Item], dict]:
         for sh in _band_order(shapes):
             _emit_shape(items, chapter, sh)
 
-    text = serialize_items(items, layer="body")
-    metrics = {
-        "pages_parsed": max(n_slides, 1),
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(items) - 1,
-    }
-    return text, items, metrics
+    return result(items, pages_parsed=max(n_slides, 1))
 
 
 def _rec(rt: int, payload: bytes, ver: int = 0, inst: int = 0) -> bytes:

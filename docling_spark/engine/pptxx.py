@@ -20,7 +20,7 @@ import io
 import zipfile
 import xml.etree.ElementTree as ET
 
-from docling_spark.engine.htmlx import Item, _mk_item, serialize_items
+from docling_spark.engine.htmlx import Item, _mk_item, new_items, result
 from docling_spark.engine.xlsxx import (
     _CHART_KIND,
     _chart_table_md,
@@ -334,8 +334,7 @@ def extract_pptx(payload: bytes) -> tuple[str, list[Item], dict]:
                 if rid in pres_rels:
                     slide_paths.append(pres_rels[rid][1])
 
-        items: list[Item] = []
-        _mk_item(items, -1, "unspecified", 0, "_root_", "body")
+        items = new_items()
 
         for slide_path in slide_paths:
             try:
@@ -514,11 +513,4 @@ def extract_pptx(payload: bytes) -> tuple[str, list[Item], dict]:
                     full = f"[{', '.join(meta)}]: {raw}" if meta else raw
                     _mk_item(items, 0, "text", 1, full, "body")
 
-    text = serialize_items(items, layer="body")
-    metrics = {
-        "pages_parsed": max(len(slide_paths), 1),
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(items) - 1,
-    }
-    return text, items, metrics
+    return result(items, pages_parsed=max(len(slide_paths), 1))

@@ -540,7 +540,7 @@ def node_verbatim(src: str, node) -> str:
 # Document walker (reference rule tables: docling/backend/latex/constants.py)
 # ---------------------------------------------------------------------------
 
-from docling_spark.engine.htmlx import Item, _mk_item  # noqa: E402
+from docling_spark.engine.htmlx import Item, _mk_item, new_items  # noqa: E402
 from docling_spark.engine.jsonx import _table_md  # noqa: E402
 
 _NEWCOMMAND = frozenset(["newcommand", "renewcommand", "providecommand"])
@@ -621,8 +621,7 @@ class TexWalker:
     def __init__(self, src: str, files: dict[str, str] | None = None):
         self.src = src
         self.files = files or {}
-        self.items: list[Item] = []
-        _mk_item(self.items, -1, "unspecified", 0, "_root_", "body")
+        self.items = new_items()
         self.custom: dict[str, str] = {}
         self.custom_nargs: dict[str, int] = {}
         self.labels: dict[str, bool] = {}

@@ -26,7 +26,7 @@ import xml.sax
 from xml.sax.handler import ContentHandler, feature_external_ges, \
     feature_external_pes
 
-from docling_spark.engine.htmlx import Item, _mk_item, serialize_items
+from docling_spark.engine.htmlx import Item, _mk_item, new_items, result
 
 HEADING_ABSTRACT = ("ABSTRACT", 2)
 HEADING_CLAIMS = ("CLAIMS", 2)
@@ -97,8 +97,7 @@ class _Doc:
     """Flat-item analog of the reference's parents/level bookkeeping."""
 
     def __init__(self):
-        self.items: list[Item] = []
-        _mk_item(self.items, -1, "unspecified", 0, "_root_", "body")
+        self.items = new_items()
         self.parents: dict[int, int] = {1: 0}
         self.table_items: list[int] = []
 
@@ -695,11 +694,4 @@ def extract_uspto(payload: str) -> tuple[str, list[Item], dict]:
             for idx, raw in zip(doc.table_items, raw_tables):
                 doc.items[idx]["text"] = _cals_table_md(raw)
 
-    text = serialize_items(doc.items, layer="body")
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(doc.items) - 1,
-    }
-    return text, doc.items, metrics
+    return result(doc.items)

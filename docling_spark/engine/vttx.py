@@ -27,6 +27,8 @@ from __future__ import annotations
 
 import re
 
+from docling_spark.engine.htmlx import new_items, result
+
 _TS_RE = re.compile(
     r"(?:(\d+):)?(\d{2}):(\d{2})[.,](\d{3})"
 )
@@ -172,10 +174,7 @@ def extract_vtt(payload: str) -> tuple[str, list[dict], dict]:
     item schema. Single-run lines are ``text`` items; multi-run lines are
     ``inline`` group items with one child per run."""
     cues = parse_cues(payload)
-    items: list[dict] = [
-        dict(item_idx=0, parent_idx=-1, label="unspecified", level=0,
-             text="_root_", content_layer="body", span_start=-1, span_end=-1)
-    ]
+    items = new_items()
     paragraphs: list[str] = []
     pos = 0
 
@@ -207,11 +206,4 @@ def extract_vtt(payload: str) -> tuple[str, list[dict], dict]:
                 for t, _f in runs:
                     _append("text", 2, gid, t, None)
 
-    n_items = len(items) - 1
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": n_items,
-    }
-    return "\n\n".join(paragraphs), items, metrics
+    return result(items, "\n\n".join(paragraphs))

@@ -40,7 +40,7 @@ import re
 import zipfile
 import xml.etree.ElementTree as ET
 
-from docling_spark.engine.htmlx import HtmlExtractor, Item, _mk_item, serialize_items
+from docling_spark.engine.htmlx import HtmlExtractor, Item, _mk_item, new_items, result
 
 XBRLI_NS = "http://www.xbrl.org/2003/instance"
 LINK_NS = "http://www.xbrl.org/2003/linkbase"
@@ -202,8 +202,7 @@ def extract_xbrl(payload: bytes | str) -> tuple[str, list[Item], dict]:
 
     meta, facts = _parse_instance(instance)
 
-    items: list[Item] = []
-    _mk_item(items, -1, "unspecified", 0, "_root_", "body")
+    items = new_items()
 
     title = " ".join(
         v for v in (meta["DocumentType"], meta["EntityRegistrantName"],
@@ -236,11 +235,4 @@ def extract_xbrl(payload: bytes | str) -> tuple[str, list[Item], dict]:
         # an indented "ignored" row.
         _mk_item(items, 0, "key_value_region", 1, f"{n_numeric} facts", "body")
 
-    text = serialize_items(items, layer="body")
-    metrics = {
-        "pages_parsed": 1,
-        "parse_score": 1.0 if n_blocks else 0.5,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(items) - 1,
-    }
-    return text, items, metrics
+    return result(items, parse_score=1.0 if n_blocks else 0.5)

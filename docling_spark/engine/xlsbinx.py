@@ -24,7 +24,7 @@ from __future__ import annotations
 import struct
 from datetime import datetime, timedelta
 
-from docling_spark.engine.htmlx import Item, _mk_item, serialize_items
+from docling_spark.engine.htmlx import Item, _mk_item, new_items, result
 from docling_spark.engine.olex import OleError, OleFile
 from docling_spark.engine.xlsxx import (
     _DATE_BUILTIN,
@@ -366,8 +366,7 @@ def extract_xls(payload: bytes) -> tuple[str, list[Item], dict]:
     except struct.error as exc:
         raise XlsError(f"malformed BIFF globals: {exc}") from exc
 
-    items: list[Item] = []
-    _mk_item(items, -1, "unspecified", 0, "_root_", "body")
+    items = new_items()
     n_sheets = 0
     for name, hidden, pos in sheets:
         if not (0 <= pos < len(wb)):
@@ -402,14 +401,7 @@ def extract_xls(payload: bytes) -> tuple[str, list[Item], dict]:
             items[tidx]["num_rows"] = len(grid)
             items[tidx]["num_cols"] = ncols
 
-    text = serialize_items(items, layer="body")
-    metrics = {
-        "pages_parsed": max(n_sheets, 1),
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(items) - 1,
-    }
-    return text, items, metrics
+    return result(items, pages_parsed=max(n_sheets, 1))
 
 
 def _rec(rt: int, payload: bytes) -> bytes:

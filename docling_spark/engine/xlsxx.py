@@ -22,7 +22,7 @@ import zipfile
 import xml.etree.ElementTree as ET
 from datetime import datetime, timedelta
 
-from docling_spark.engine.htmlx import Item, _mk_item, serialize_items
+from docling_spark.engine.htmlx import Item, _mk_item, new_items, result
 
 NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 RNS = "{http://schemas.openxmlformats.org/officeDocument/2006/relationships}"
@@ -535,8 +535,7 @@ def extract_xlsx(payload: bytes) -> tuple[str, list[Item], dict]:
         except KeyError:
             pass
 
-        items: list[Item] = []
-        _mk_item(items, -1, "unspecified", 0, "_root_", "body")
+        items = new_items()
         n_sheets = 0
         sheets_el = wb.find(NS + "sheets")
         for sheet_el in (sheets_el or []):
@@ -607,11 +606,4 @@ def extract_xlsx(payload: bytes) -> tuple[str, list[Item], dict]:
             for _cell, full in _sheet_comments(zf, path):
                 _mk_item(items, hidx, "text", 2, full, layer)
 
-    text = serialize_items(items, layer="body")
-    metrics = {
-        "pages_parsed": max(n_sheets, 1),
-        "parse_score": 1.0,
-        "boilerplate_ratio": 0.0,
-        "n_items": len(items) - 1,
-    }
-    return text, items, metrics
+    return result(items, pages_parsed=max(n_sheets, 1))

@@ -466,14 +466,10 @@ def _bounded_unigrams(corpus_toks: DataFrame,
     uni = corpus_toks.groupBy("token").agg(F.count("*").alias("n_t"))
     tot = uni.agg(F.coalesce(F.sum("n_t"), F.lit(0)).alias("n_total"),
                   F.count("*").alias("vocab_all"))
-    # persist the top-V table: it is consumed three times (its own
-    # totals, the scalar attach, the per-token join) and physical
-    # exchange reuse does not kick in across those subtrees, so without
-    # the cache the token explode + unigram shuffle re-ran for each.
-    # Safe to pin: the table is O(max_vocab) rows by construction. Like
-    # dedup's persisted candidate frames, it must stay live until the
-    # consumer executes (callers/bench clear cache between queries).
-    top = uni.orderBy(F.desc("n_t"), "token").limit(max_vocab).persist()
+    # not persisted: the callers' frames read it lazily, so no caller
+    # could release a cache; its three consumers (own totals, scalar
+    # attach, token join) each re-run the token explode + unigram shuffle
+    top = uni.orderBy(F.desc("n_t"), "token").limit(max_vocab)
     top_tot = top.agg(
         F.coalesce(F.sum("n_t"), F.lit(0)).alias("n_top"),
         F.count("*").alias("v_top"))

@@ -22,51 +22,34 @@ from docling_spark.operators.extract_ops import extract_turns
 from docling_spark.schema import TRANSCRIPTS_SCHEMA
 
 
-def read_transcript_stream(
-    spark: SparkSession, input_path: str, max_files_per_trigger: int = 16
-) -> DataFrame:
-    """File-source stream of transcript parquet drops (an Iceberg streaming
-    read swaps in behind the same schema)."""
-    return (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-    )
-
-
-def stream_extract(
-    transcripts: DataFrame,
-    pdf_passwords: tuple[str, ...] = (),
-    allowed_formats: tuple[str, ...] | None = None,
-) -> DataFrame:
-    """The streaming plan: identical operator, streaming semantics free."""
-    return extract_turns(transcripts, pdf_passwords=pdf_passwords,
-                         allowed_formats=allowed_formats)
-
-
 def run_stream(
     spark: SparkSession,
     input_path: str,
     output_path: str,
     checkpoint_path: str,
-    available_now: bool = True,
     pdf_passwords: tuple[str, ...] = (),
     allowed_formats: tuple[str, ...] | None = None,
 ):
-    """Launch the extraction stream (availableNow=True → catch-up batch
-    semantics, the reference's batch-polling analog)."""
-    src = read_transcript_stream(spark, input_path)
-    out = stream_extract(src, pdf_passwords=pdf_passwords,
-                         allowed_formats=allowed_formats)
-    writer = (
+    """Launch the catch-up extraction stream (availableNow: every
+    transcript parquet drop under ``input_path`` at start, then stop —
+    the reference's batch-polling analog). The file source reads 16
+    files per micro-batch; an Iceberg streaming read swaps in behind the
+    same schema. The plan is the batch operator, unchanged."""
+    src = (
+        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
+        .option("maxFilesPerTrigger", 16)
+        .parquet(input_path)
+    )
+    out = extract_turns(src, pdf_passwords=pdf_passwords,
+                        allowed_formats=allowed_formats)
+    return (
         out.writeStream.format("parquet")
         .option("path", output_path)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def join_streams_within(

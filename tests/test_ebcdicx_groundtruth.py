@@ -14,11 +14,13 @@ from docling_spark.engine.ebcdicx import extract_ebcdic
 SRC = pathlib.Path("/root/reference/tests/data/ebcdic/sources")
 GT = pathlib.Path("/root/reference/tests/data/ebcdic/groundtruth")
 
+BOXNOTE_SRC = pathlib.Path("/root/reference/tests/data/boxnote/sources")
+BOXNOTE_GT = pathlib.Path("/root/reference/tests/data/boxnote/groundtruth")
+
 NAMES = ["311_calls_for_service", "gas_disposition", "ola013k"]
 
-pytestmark = pytest.mark.requires_reference(SRC)
 
-
+@pytest.mark.requires_reference(SRC)
 @pytest.mark.parametrize("name", NAMES)
 def test_reference_groundtruth_ebcdic(name: str) -> None:
     layout = json.loads((SRC / f"{name}.layout.json").read_text())
@@ -55,16 +57,11 @@ def test_packed_and_zoned_decimals() -> None:
     assert "| -12.3 | -123 |" in text
 
 
+@pytest.mark.requires_reference(BOXNOTE_SRC)
 def test_boxnote_groundtruth() -> None:
-    import pathlib
-
     from docling_spark.engine.boxnotex import extract_boxnote
 
-    src = pathlib.Path(
-        "/root/reference/tests/data/boxnote/sources/sample.boxnote")
-    gt = pathlib.Path(
-        "/root/reference/tests/data/boxnote/groundtruth/sample.boxnote.md")
-    if not src.exists():
-        return
-    text, items, _m = extract_boxnote(src.read_text())
-    assert text.strip() == gt.read_text().strip()
+    text, items, _m = extract_boxnote(
+        (BOXNOTE_SRC / "sample.boxnote").read_text())
+    gt = (BOXNOTE_GT / "sample.boxnote.md").read_text()
+    assert text.strip() == gt.strip()

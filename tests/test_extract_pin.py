@@ -447,7 +447,9 @@ def success_cases() -> list[tuple[str, str]]:
         ("ppt", _b64(synthesize_ppt([{"title": "Deck 7", "paras": ["hi"],
                                       "bullets": ["a", "b"]}]))),
         ("plain", "alpha beta gamma"),
-        # empty and root-only documents: each engine's zero-item metrics
+        # empty, root-only and degenerate documents: the metrics each
+        # engine computes for them (an xbrl instance without a text
+        # block scores 0.5)
         ("html", ""),
         ("html", "<footer>only furniture</footer>"),
         ("md", ""),

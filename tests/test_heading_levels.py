@@ -3,6 +3,9 @@ marker families, ambiguity resolution, level compression, bookmark join."""
 
 from __future__ import annotations
 
+import pathlib
+
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -108,18 +111,46 @@ def test_bookmark_containment_match(spark):
     assert len(got) == 1 and got[0].level == 1
 
 
-def test_docling_json_roundtrip_engines():
-    import glob
+HTML_SRC = pathlib.Path("/root/reference/tests/data/html/sources")
 
+# in-repo documents: inline marks and a link, nested and ordered lists,
+# a spanned table, code, a captioned picture with furniture around it,
+# and body text before the first heading
+ROUNDTRIP_HTML = (
+    "<h1>Title</h1><p>alpha <b>beta</b> <i>gamma</i> "
+    "<a href='http://x.org/a'>link</a></p>",
+    "<h2>Sec</h2><ul><li>x<ul><li>y</li></ul></li><li>z</li></ul>"
+    "<ol start='3'><li>a</li><li>b</li></ol>",
+    "<table><tr><th>a</th><th>b</th><th>c</th></tr>"
+    "<tr><td>1</td><td colspan='2'>2</td></tr></table>",
+    "<pre><code class='language-python'>print(1)\nprint(2)</code></pre>"
+    "<p>after</p>",
+    "<header>site nav</header><h1>Doc</h1><figure><img src='x.png'>"
+    "<figcaption>Fig 1</figcaption></figure><h3>Deep</h3><p>tail</p>"
+    "<footer>f</footer>",
+    "<title>T</title><p>before any heading</p><h1>H</h1><p>x &amp; y</p>",
+)
+
+
+def _assert_docling_json_roundtrip(html: str, name: str) -> None:
     from docling_spark.engine.htmlx import extract_html
     from docling_spark.engine.jsonx import extract_docling_json
     from docling_spark.engine.serialize import serialize_docling_json
 
-    for f in sorted(glob.glob(
-            "/root/reference/tests/data/html/sources/*.html"))[:8]:
-        text, items = extract_html(open(f).read())
-        text2, items2, _m = extract_docling_json(serialize_docling_json(items))
-        assert text2.strip() == text.strip(), f
+    text, items = extract_html(html)
+    text2, _items2, _m = extract_docling_json(serialize_docling_json(items))
+    assert text2.strip() == text.strip(), name
+
+
+def test_docling_json_roundtrip_engines():
+    for i, html in enumerate(ROUNDTRIP_HTML):
+        _assert_docling_json_roundtrip(html, f"ROUNDTRIP_HTML[{i}]")
+
+
+@pytest.mark.requires_reference(HTML_SRC)
+def test_docling_json_roundtrip_reference_html():
+    for f in sorted(HTML_SRC.glob("*.html"))[:8]:
+        _assert_docling_json_roundtrip(f.read_text(), f.name)
 
 
 def test_bookmark_sequential_greedy_not_parallel_rounds(spark):

@@ -86,6 +86,19 @@ def test_lm_vocab_overflow_report(spark):
     assert lm_vocab_overflow(docs, max_vocab=16).count() == 0
 
 
+def test_bounded_lm_leaves_no_cached_blocks(spark):
+    """The three bounded-LM queries cache nothing: a caller that never
+    unpersists anything still ends with the persistent-RDD count it
+    started with."""
+    sc = spark.sparkContext
+    docs = _docs(spark, [(1, "aa aa bb\ncc"), (2, "bb cc dd")])
+    before = sc._jsc.getPersistentRDDs().size()
+    line_perplexity(docs, max_vocab=2).collect()
+    ccnet_buckets(docs, max_vocab=2).collect()
+    lm_vocab_overflow(docs, max_vocab=2).collect()
+    assert sc._jsc.getPersistentRDDs().size() == before
+
+
 # ---------------------------------------------- int8 embedding quantization
 
 def test_quantize_roundtrip_error_bounded(spark):

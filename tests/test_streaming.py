@@ -19,7 +19,7 @@ def test_stream_matches_batch(spark, tmp_path):
     tr.write.parquet(inp)
     n_in = spark.read.parquet(inp).count()
 
-    q = run_stream(spark, inp, out, ckpt, available_now=True)
+    q = run_stream(spark, inp, out, ckpt)
     try:
         assert q.awaitTermination(300)
     finally:
@@ -42,7 +42,7 @@ def test_stream_matches_batch(spark, tmp_path):
     assert batch == stream
 
     # restart with the same checkpoint and no new files: no duplicates
-    q2 = run_stream(spark, inp, out, ckpt, available_now=True)
+    q2 = run_stream(spark, inp, out, ckpt)
     try:
         assert q2.awaitTermination(120)
     finally:
@@ -117,7 +117,7 @@ def test_stream_allowed_formats_policy(spark, tmp_path):
     inp, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ck"))
     df.write.parquet(inp)
 
-    q = run_stream(spark, inp, out, ckpt, available_now=True,
+    q = run_stream(spark, inp, out, ckpt,
                    allowed_formats=("html", "csv"))
     try:
         assert q.awaitTermination(300)
