@@ -152,3 +152,112 @@ def test_lsh_pair_plans_have_no_join(spark):
             assert join not in plan, join
         # the cap's window and the per-bucket scoring share one exchange
         assert "WindowGroupLimit" in formatted_plan(spark, df)
+
+
+# -- sign-LSH bucket parity --------------------------------------------------
+
+_EMB = "vec_id long, embedding array<double>"
+
+
+def _jvm_bucket(v, plane_ids, dim):
+    """The sign bucket as the JVM expression it once was, kept here as the
+    reference: bit ``i`` is ``aggregate(zip_with(v, plane, *), 0.0, +) >
+    0`` against the literal plane, so a null dot (null vector, null
+    element, other length) gives 0 and a NaN dot gives 1."""
+    from docling_spark.operators.similarity import _plane
+
+    def dot(a, b):
+        return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
+                           F.lit(0.0), lambda acc, x: acc + x)
+
+    return sum(
+        (F.when(dot(v, F.array(*[F.lit(x) for x in _plane(dim, p)])) > 0,
+                F.lit(1)).otherwise(F.lit(0))
+         * F.lit(2 ** i)).cast("long")
+        for i, p in enumerate(plane_ids))
+
+
+def _near_plane_vectors(rng, dim, plane_ids):
+    """Vectors with the component along a plane projected out, so their
+    dot with that plane lands within rounding of 0 and its sign depends
+    on the order the products are summed in."""
+    from docling_spark.operators.similarity import _plane
+
+    out = []
+    for p in plane_ids:
+        w = np.array(_plane(dim, p))
+        for _ in range(3):
+            v = rng.standard_normal(dim)
+            out.append(v - (v @ w) / (w @ w) * w)
+    return out
+
+
+def _edge_rows(dim):
+    vec = [0.25 * (i % 7) - 0.8 for i in range(dim)]
+    with_null, with_nan = list(vec), list(vec)
+    with_null[5] = None
+    with_nan[9] = float("nan")
+    pos_inf, neg_inf = list(vec), list(vec)
+    pos_inf[0] = float("inf")
+    neg_inf[3] = float("-inf")
+    return [None, [], vec[:-1], vec + [0.5], with_null, with_nan,
+            pos_inf, neg_inf, [0.0] * dim, [-0.0] * dim, [1e-310] * dim,
+            [1e-310 * (1 if i % 3 else -1) for i in range(dim)]]
+
+
+def _parity_frames(spark, dim=64):
+    rng = np.random.default_rng(17)
+    random_rows = [list(map(float, rng.standard_normal(dim)))
+                   for _ in range(500)]
+    random_rows += [list(map(float, v))
+                    for v in _near_plane_vectors(rng, dim, range(18))]
+    edges = _edge_rows(dim)
+    return [spark.createDataFrame(list(enumerate(rows)), _EMB)
+            for rows in (random_rows, edges)]
+
+
+def test_banded_lsh_buckets_equal_the_jvm_dot_products(spark):
+    from docling_spark.operators.similarity import banded_lsh_buckets
+
+    n_bands, ppb, dim = 6, 3, 64
+    for emb in _parity_frames(spark, dim):
+        v = F.col("embedding").cast("array<double>")
+        want = emb.select("vec_id", F.posexplode(F.array(*[
+            _jvm_bucket(v, range(b * ppb, (b + 1) * ppb), dim)
+            for b in range(n_bands)])).alias("band", "bucket"))
+        got = banded_lsh_buckets(emb, n_bands, ppb, dim)
+        got_rows = sorted(tuple(r) for r in
+                          got.select("vec_id", "band", "bucket").collect())
+        want_rows = sorted(tuple(r) for r in want.collect())
+        assert len(got_rows) == emb.count() * n_bands
+        assert got_rows == want_rows
+        assert len({r[2] for r in got_rows}) > 1
+
+
+def test_lsh_buckets_equal_the_jvm_dot_products(spark):
+    from docling_spark.operators.similarity import lsh_buckets
+
+    n_planes, dim = 8, 64
+    for emb in _parity_frames(spark, dim):
+        v = F.col("embedding").cast("array<double>")
+        want = emb.select("vec_id",
+                          _jvm_bucket(v, range(n_planes), dim).alias("b"))
+        got = lsh_buckets(emb, n_planes, dim)
+        assert got.schema["bucket"].dataType.simpleString() == "bigint"
+        assert (sorted(tuple(r) for r in
+                       got.select("vec_id", "bucket").collect())
+                == sorted(tuple(r) for r in want.collect()))
+
+
+def test_edge_vectors_follow_the_jvm_null_and_nan_rules(spark):
+    """Null, empty, ragged and null-element vectors get bucket 0 in every
+    band; a NaN element sets every bit (Spark orders NaN above 0)."""
+    from docling_spark.operators.similarity import banded_lsh_buckets
+
+    emb = spark.createDataFrame(list(enumerate(_edge_rows(64))), _EMB)
+    got = {}
+    for r in banded_lsh_buckets(emb).collect():
+        got.setdefault(r.vec_id, []).append(r.bucket)
+    for i in (0, 1, 2, 3, 4, 8, 9):
+        assert got[i] == [0] * 6, i
+    assert got[5] == [7] * 6
