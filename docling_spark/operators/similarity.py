@@ -8,8 +8,12 @@
   n² block join, at scale gated behind LSH candidates.
 - **sign-LSH buckets (scale path)** — random-hyperplane signs derived from
   the md5 hash family (deterministic, no RNG state): each vector gets a
-  ``n_planes``-bit bucket; ANN probes only its bucket. Recall is validated
-  against brute force in tests.
+  ``n_planes``-bit bucket; ANN probes only its bucket. The signs come from
+  one scalar Arrow UDF over the vector column
+  (``functions.sketch.sign_bands``, a numpy left fold that matches the
+  JVM dot product bit for bit); only the vector goes to Python and only
+  its band buckets come back. Recall is validated against brute force in
+  tests.
 - **per-bucket pair scoring** — the LSH pair families
   (:func:`cosine_pairs_lsh`, :func:`ann_bucket_pairs`) cap each bucket
   with ``dedup.cap_buckets`` and hand every capped bucket to Python once,
@@ -37,9 +41,8 @@ def _norm(a):
 
 
 def _dot_py(a, b) -> float:
-    """Driver-side dot product shared by the tiny codebook/plane rankings
-    (one definition so guards like the zero-norm fallback can't drift
-    between call sites)."""
+    """Driver-side dot product of the tiny codebook ranking in
+    :func:`ivf_topk`."""
     return sum(x * y for x, y in zip(a, b))
 
 
@@ -137,27 +140,11 @@ def banded_lsh_buckets(
     band*planes_per_band + i). Two vectors are candidates if they collide
     in ANY band — the classic banding trick that trades a small constant
     row blow-up (×n_bands) for recall that approaches 1 as cosine → 1.
-    All dot products are JVM-side against broadcast literal planes."""
-    v = F.col(vec_col).cast("array<double>")
-    band_buckets = []
-    for band in range(n_bands):
-        bucket = sum(
-            (
-                F.when(
-                    _dot(v, F.array(*[
-                        F.lit(x)
-                        for x in _plane(dim, band * planes_per_band + i)
-                    ])) > 0,
-                    F.lit(1),
-                ).otherwise(F.lit(0))
-                * F.lit(2 ** i)
-            ).cast("long")
-            for i in range(planes_per_band)
-        )
-        band_buckets.append(bucket)
+    The buckets come from :func:`_sign_bands`."""
     return emb.select(
         F.col(id_col), F.col(vec_col),
-        F.posexplode(F.array(*band_buckets)).alias("band", "bucket"),
+        F.posexplode(_sign_bands(vec_col, n_bands, planes_per_band, dim))
+        .alias("band", "bucket"),
     )
 
 
@@ -278,23 +265,44 @@ def _plane(dim: int, plane_id: int) -> list[float]:
     return out
 
 
+def _planes(n_planes: int, dim: int):
+    """The ``(n_planes, dim)`` matrix of planes ``0 .. n_planes - 1``."""
+    import numpy as np
+
+    return np.array([_plane(dim, p) for p in range(n_planes)])
+
+
+def _sign_bands(vec_col: str, n_bands: int, planes_per_band: int, dim: int):
+    """``array<long>`` column of the ``n_bands`` sign-LSH buckets of
+    ``vec_col``: bit ``i`` of band ``b`` is the sign of the vector's dot
+    with plane ``b * planes_per_band + i``. One scalar Arrow UDF
+    (``functions.sketch.sign_bands``) over the vector, the JVM's null
+    rule included: a null vector, a null element or a length other than
+    ``dim`` gives 0 in every band, and a NaN dot counts as positive."""
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
+
+    from docling_spark.functions.sketch import sign_bands
+
+    planes = _planes(n_bands * planes_per_band, dim)
+
+    def _bands(vecs):
+        return sign_bands(vecs, planes, planes_per_band)
+
+    # real (non-string) hints: `from __future__ import annotations` would
+    # otherwise stringify them and break arrow_udf's type inference
+    _bands.__annotations__ = {"vecs": pa.Array, "return": pa.Array}
+    return arrow_udf(_bands, "array<long>")(
+        F.col(vec_col).cast("array<double>"))
+
+
 def lsh_buckets(
     emb: DataFrame, n_planes: int = 8, dim: int = 64,
     vec_col: str = "embedding", id_col: str = "vec_id",
 ) -> DataFrame:
-    """Sign-LSH bucket id per vector: bit b = sign(v · plane_b).
-    JVM-side dot products against broadcast constant planes."""
-    v = F.col(vec_col).cast("array<double>")
-    bucket = sum(
-        (
-            F.when(
-                _dot(v, F.array(*[F.lit(x) for x in _plane(dim, b)])) > 0,
-                F.lit(1),
-            ).otherwise(F.lit(0))
-            * F.lit(2 ** b)
-        ).cast("long")
-        for b in range(n_planes)
-    )
+    """Sign-LSH bucket id per vector: bit b = sign(v · plane_b), the
+    one-band case of :func:`_sign_bands`."""
+    bucket = _sign_bands(vec_col, 1, n_planes, dim)[0]
     return emb.select(F.col(id_col), F.col(vec_col), bucket.alias("bucket"))
 
 
@@ -552,16 +560,20 @@ def ann_topk_lsh(
     ``multiprobe_hamming`` bits of the query's bucket. At corpus scale the
     bucket column is the partition key — the probe touches a handful of
     partitions instead of the full table."""
-    # query bucket computed driver-side with the same planes
-    qbits = 0
-    for b in range(n_planes):
-        if _dot_py(query_vec, _plane(dim, b)) > 0:
-            qbits |= 1 << b
+    import pyarrow as pa
+
+    from docling_spark.functions.sketch import sign_bands
+
+    # the query's bucket by the kernel and the planes the corpus uses
+    qbits = sign_bands(pa.array([query_vec], pa.list_(pa.float64())),
+                       _planes(n_planes, dim), n_planes)[0][0].as_py()
     buckets = lsh_buckets(emb, n_planes, dim, vec_col, id_col)
     probe = buckets.filter(
         F.bit_count(F.col("bucket").bitwiseXOR(F.lit(qbits))) <= multiprobe_hamming
     )
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
+    # a None element stays null, so its scores are null like its bucket
+    q = F.array(*[F.lit(None if v is None else float(v))
+                  for v in query_vec]).cast("array<double>")
     scored = probe.select(
         F.col(id_col),
         F.round(cosine(F.col(vec_col).cast("array<double>"), q), 6).alias("score"),

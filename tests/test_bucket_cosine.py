@@ -186,7 +186,7 @@ def _near_plane_vectors(rng, dim, plane_ids):
     out = []
     for p in plane_ids:
         w = np.array(_plane(dim, p))
-        for _ in range(3):
+        for _ in range(8):
             v = rng.standard_normal(dim)
             out.append(v - (v @ w) / (w @ w) * w)
     return out
@@ -261,3 +261,45 @@ def test_edge_vectors_follow_the_jvm_null_and_nan_rules(spark):
     for i in (0, 1, 2, 3, 4, 8, 9):
         assert got[i] == [0] * 6, i
     assert got[5] == [7] * 6
+
+
+def test_bucket_plans_call_one_arrow_udf_and_no_jvm_dot(spark):
+    from docling_spark.operators.similarity import (
+        banded_lsh_buckets,
+        lsh_buckets,
+    )
+
+    emb = _mega_emb(spark, 4)
+    for df in (banded_lsh_buckets(emb), lsh_buckets(emb)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 1
+        assert "zip_with" not in plan and "aggregate" not in plan
+
+
+def test_ann_topk_lsh_probes_the_bucket_lsh_buckets_gives_the_query(spark):
+    """The query's bucket follows the corpus rule: a NaN element sets every
+    bit, a ragged or null-element query gets bucket 0."""
+    from docling_spark.operators.similarity import ann_topk_lsh, lsh_buckets
+
+    rng = np.random.default_rng(23)
+    normal = [float(x) for x in rng.standard_normal(64)]
+    nan = list(normal)
+    nan[7] = float("nan")
+    short = normal[:63]
+    null_elem = list(normal)
+    null_elem[2] = None
+    queries = [normal, nan, short, null_elem]
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in rng.standard_normal(64)])
+         for i in range(300)]
+        + [(1000 + i, q) for i, q in enumerate(queries)], _EMB)
+    buckets = {r.vec_id: r.bucket
+               for r in lsh_buckets(corpus).collect()}
+    for i, q in enumerate(queries):
+        (want,) = [r.bucket for r in lsh_buckets(
+            spark.createDataFrame([(0, q)], _EMB)).collect()]
+        probed = {r.vec_id for r in ann_topk_lsh(
+            corpus, q, k=1000, multiprobe_hamming=0).collect()}
+        assert 1000 + i in probed
+        assert probed == {v for v, b in buckets.items() if b == want}
+    assert buckets[1001] == 255 and buckets[1002] == buckets[1003] == 0
